@@ -7,7 +7,7 @@ Importing this package populates the registry with every declared query
 
 from compss_python_spark.plans.registry import REGISTRY, QuerySpec, query, table
 
-# Populate the registry (import order = initial display order).
+# Populate the registry; REGISTRY keeps declaration order.
 from compss_python_spark.plans import queries_etl  # noqa: F401
 from compss_python_spark.plans import queries_agg  # noqa: F401
 from compss_python_spark.plans import queries_stats  # noqa: F401
@@ -18,61 +18,4 @@ from compss_python_spark.plans import queries_feature  # noqa: F401
 from compss_python_spark.plans import queries_io  # noqa: F401
 from compss_python_spark.plans import queries_streaming  # noqa: F401
 
-# The driver's CORRECTNESS check records only the first ~50 REGISTRY entries
-# per round (dict order).  Reorder so the window proves what needs proving,
-# in tiers (stable within each tier):
-#   0. hand-pinned SLOT_PRIORITY (rare),
-#   1. unproven queries (new additions land here automatically),
-#   2. proven queries whose TRANSITIVE module dependencies are in this
-#      round's CHANGED_MODULES (computed by _depmap — a shared-helper
-#      refactor re-proves its dependents even though their bodies didn't
-#      change),
-#   3. a deterministic rotating canary of otherwise-untouched proven
-#      queries (walks the whole proven set over rounds),
-#   4. the remaining proven queries.
-import pathlib as _pathlib  # noqa: E402
-
-from compss_python_spark.plans import _depmap  # noqa: E402
-from compss_python_spark.plans._proven import (  # noqa: E402
-    CHANGED_MODULES,
-    PROVEN,
-    PROVEN_R6,
-    SLOT_PRIORITY,
-)
-
-_repo_root = _pathlib.Path(__file__).resolve().parents[2]
-
-# Authoritative proven set: derived from the driver's own CORRECTNESS
-# artifacts (latest row per name must be green).  The static frozensets in
-# _proven are only the round-1 / corrupted-tree fallback — round 7 showed
-# that hand-maintained per-round sets rot (no PROVEN_R7 was ever written,
-# which would have burned the round-8 window re-proving the r7 batch).
-_artifact_proven = _depmap.proven_from_artifacts(
-    _repo_root,
-    declared_rows_only=frozenset(
-        n for n, s in REGISTRY.items() if s.sql is None
-    ),
-)
-PROVEN_ALL: frozenset[str] = _artifact_proven if _artifact_proven else (PROVEN | PROVEN_R6)
-
-_reslot = _depmap.reslot_for_changed(REGISTRY, PROVEN_ALL, CHANGED_MODULES)
-_round = _depmap.current_round(_repo_root)
-_canary_pool = [n for n in REGISTRY if n in PROVEN_ALL and n not in _reslot]
-_canary = _depmap.canary(_canary_pool, _round)
-
-_rank: dict[str, tuple] = {}
-for _tier, _names in ((0, SLOT_PRIORITY), (2, _reslot), (3, _canary)):
-    for _i, _n in enumerate(_names):
-        _rank.setdefault(_n, (_tier, _i))
-_order = sorted(
-    REGISTRY,
-    key=lambda n, _i=iter(range(len(REGISTRY))): (
-        _rank.get(n, (4,) if n in PROVEN_ALL else (1,)),
-        next(_i),
-    ),
-)
-_entries = {n: REGISTRY[n] for n in _order}
-REGISTRY.clear()
-REGISTRY.update(_entries)
-
-__all__ = ["REGISTRY", "QuerySpec", "query", "table", "PROVEN_ALL"]
+__all__ = ["REGISTRY", "QuerySpec", "query", "table"]

@@ -217,26 +217,45 @@ def test_q2_min_cost_broadcasts_dims(spark, sf_dir):
     assert plan.count("BroadcastHashJoin") >= 2
 
 
-def test_depmap_reslots_dependents_of_changed_modules():
-    """The driver-window slotter re-proves every proven query whose
-    TRANSITIVE deps include a changed module — a shared-helper refactor
-    cannot hide behind its dependents' unchanged bodies."""
-    import compss_python_spark.plans as plans
-    from compss_python_spark.plans import PROVEN_ALL, _depmap
+def test_plans_import_reads_no_files_and_keeps_declaration_order():
+    """Importing the registry opens nothing under the repository except
+    Python sources and bytecode, and REGISTRY keeps declaration order: its
+    first entry is the first @query in queries_etl.py."""
+    import ast
+    import pathlib
+    import subprocess
+    import sys
 
-    deps = _depmap.query_dependencies(plans.REGISTRY)
-    # direct dependency: spearman's body calls functions.statistics
-    assert "functions.statistics" in deps["stats_spearman"]
-    # transitive: the sketch queries reach llm.bloom only through
-    # functions.sketches (which imports bloom's hash helper)
-    assert "llm.bloom" in deps["stats_count_min_sketch"]
-    reslot = _depmap.reslot_for_changed(
-        plans.REGISTRY, PROVEN_ALL, {"functions.statistics"}
+    root = pathlib.Path(__file__).resolve().parents[1]
+    etl = root / "compss_python_spark" / "plans" / "queries_etl.py"
+    first_declared = next(
+        dec.args[0].value
+        for node in ast.parse(etl.read_text()).body
+        if isinstance(node, ast.FunctionDef)
+        for dec in node.decorator_list
+        if isinstance(dec, ast.Call) and getattr(dec.func, "id", None) == "query"
     )
-    assert "stats_spearman" in reslot and "stats_mann_whitney" in reslot
-    # untouched-family queries are NOT dragged in
-    assert "tpch_q1_pricing_summary" not in reslot
-    assert _depmap.reslot_for_changed(plans.REGISTRY, PROVEN_ALL, set()) == ()
+    probe = f"""
+import os, sys
+root = {str(root)!r}
+opened = []
+def hook(event, args):
+    if event == "open" and isinstance(args[0], (str, bytes)):
+        path = os.path.abspath(os.fsdecode(args[0]))
+        if path.startswith(root + os.sep) and not path.endswith((".py", ".pyc")):
+            opened.append(path)
+sys.dont_write_bytecode = True  # bytecode caches are written via temp names
+sys.addaudithook(hook)
+sys.path.insert(0, root)
+from compss_python_spark.plans import REGISTRY
+assert not opened, opened
+print(next(iter(REGISTRY)))
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=root, capture_output=True, text=True
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == first_declared
 
 
 def test_headline_plans_have_no_undeclared_python_nodes(spark, sf_dir):
@@ -294,71 +313,6 @@ def test_pair_stream_split_evaluates_once_in_optimized_plan(spark):
     assert plan.count("split(") == 1, plan
     lam = plan[plan.index("lambdafunction"):] if "lambdafunction" in plan else ""
     assert "split(" not in lam.split("ELSE")[0], plan
-
-
-def test_proven_set_derives_from_correctness_artifacts():
-    """The proven set is read from the driver's CORRECTNESS_r*.json files,
-    not a hand-maintained frozenset (round 7's missing PROVEN_R7 would have
-    burned the round-8 window re-proving the same 50 rows).  Every name in
-    the NEWEST artifact must be proven — i.e. out of tier 1 — and a red or
-    errored row must NOT count as proven."""
-    import json
-    import pathlib
-    import re
-
-    from compss_python_spark import plans
-    from compss_python_spark.plans import PROVEN_ALL, _depmap
-
-    root = pathlib.Path(plans.__file__).resolve().parents[2]
-    files = sorted(
-        (f for f in root.iterdir() if re.fullmatch(r"CORRECTNESS_r\d+\.json", f.name)),
-        key=lambda f: int(re.search(r"r(\d+)", f.name).group(1)),
-    )
-    if not files:  # round 1: static fallback is in force
-        return
-    newest = json.loads(files[-1].read_text())
-    for name, row in newest.items():
-        green = bool(row.get("hash_match")) or (
-            row.get("err") == "no_oracle" and row.get("spark_rows") is not None
-        )
-        if green and name in plans.REGISTRY:
-            assert name in PROVEN_ALL, f"{name} has a green driver row but sits in tier 1"
-    # After the tier-0 hand-pins, the window head is exactly the unproven
-    # queries (tier 1), in registry order.
-    from compss_python_spark.plans._proven import SLOT_PRIORITY
-
-    names = [n for n in plans.REGISTRY if n not in SLOT_PRIORITY]
-    n_unproven = sum(1 for n in names if n not in PROVEN_ALL)
-    assert all(n not in PROVEN_ALL for n in names[:n_unproven])
-
-    # red / errored rows never prove (synthetic artifact tree)
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        p = pathlib.Path(d)
-        (p / "CORRECTNESS_r01.json").write_text(json.dumps({
-            "good": {"hash_match": True, "err": None},
-            "red": {"hash_match": False, "rows_match": True, "err": None},
-            "errored": {"hash_match": None, "spark_rows": None, "err": "boom"},
-            "rows_only": {"hash_match": None, "spark_rows": 7, "err": "no_oracle"},
-            "regressed": {"hash_match": True, "err": None},
-        }))
-        (p / "CORRECTNESS_r02.json").write_text(json.dumps({
-            "regressed": {"hash_match": False, "rows_match": True, "err": None},
-        }))
-        got = _depmap.proven_from_artifacts(p)
-        assert got == {"good", "rows_only"}
-
-
-def test_depmap_canary_rotates_deterministically():
-    from compss_python_spark.plans import _depmap
-
-    pool = [f"q{i}" for i in range(10)]
-    c1 = _depmap.canary(pool, round_no=1, k=4)
-    c2 = _depmap.canary(pool, round_no=2, k=4)
-    assert c1 == _depmap.canary(pool, round_no=1, k=4)  # deterministic
-    assert c1 != c2  # walks the pool
-    assert set(c1) | set(c2) <= set(pool) and len(c1) == 4
 
 
 def test_domain_cap_plans_window_group_limit(spark, sf_dir):

@@ -333,11 +333,11 @@ def _err(e: BaseException) -> str:
     """Flatten an exception message to ONE line (first 2000 chars).
 
     Py4J error strings carry the Java stack trace on FOLLOWING lines, so a
-    per-line log parser (tools/gate_supervisor.py) only ever saw
-    "An error occurred while calling oNN.collectToPython." and could not
-    tell a heap death from a digest defect.  Whitespace-collapsing puts the
-    root cause (OutOfMemoryError / No space left on device / Connection
-    refused) on the SAME ✗ line the supervisor classifies from.
+    reader scanning the log line by line sees only "An error occurred
+    while calling oNN.collectToPython." and cannot tell a heap death from a
+    digest defect.  Whitespace-collapsing puts the root cause
+    (OutOfMemoryError / No space left on device / Connection refused) on
+    the SAME ✗ line as the query name.
     """
     return " ".join(str(e).split())[:2000]
 
