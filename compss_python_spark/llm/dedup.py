@@ -1225,9 +1225,9 @@ def semantic_dedup(
     per-cluster dedup rates.
 
     Scale shape (the reason SemDeDup beats all-pairs at 100 TB): the
-    quadratic cosine comparison runs per CLUSTER, never globally — one
-    broadcast of the k-centroid row, cell assignment as a narrow
-    plan expression (same argmin machinery :func:`~compss_python_spark.llm.
+    quadratic cosine comparison runs per CLUSTER, never globally — the k
+    centroids embedded in the plan as one constant, cell assignment as a
+    narrow plan expression (same argmin machinery :func:`~compss_python_spark.llm.
     similarity.ivf_topk` proved against SQL), ONE shuffle on cell id for
     the within-cluster self-join.  Cluster sizes bound the pair count;
     the guard is TWO-TIER (round 10, replacing round 8's single hard
@@ -1246,43 +1246,19 @@ def semantic_dedup(
     SQL-oracle-checkable; ``None`` trains on a bounded corpus sample
     (FAISS-style, :func:`~compss_python_spark.llm.similarity.
     _train_quantizer_sample`) for cell balance in production.
+    A NaN or ±inf centroid (given, or trained from a corpus holding one)
+    raises ``ValueError``.
     """
-    from compss_python_spark.llm.similarity import (
-        _train_quantizer_sample,
-        dot_expr,
-        norm_expr,
-    )
+    from compss_python_spark.centroids import centroid_dists
+    from compss_python_spark.llm.similarity import _train_quantizer_sample, norm_expr
 
     if centroids is None:
         centroids = _train_quantizer_sample(df, vec_col, n_cells, seed)
 
-    spark = df.sparkSession
-    cent_row = F.broadcast(
-        spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "cell int, cvec array<double>",
-        ).agg(F.array_sort(F.collect_list(F.struct("cell", "cvec"))).alias("_cents"))
-    )
-
-    def cell_dists(vcol):
-        v = vcol.cast("array<double>")
-        return F.transform(
-            F.col("_cents"),
-            lambda s: F.struct(
-                F.aggregate(
-                    F.zip_with(v, s.cvec, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d2"),
-                s.cell.alias("cell"),
-            ),
-        )
-
+    cells = dict(enumerate(centroids))
     assigned = (
         df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .crossJoin(cent_row)
-        .withColumn("cell", F.array_min(cell_dists(F.col("_v"))).cell)
-        .drop("_cents")
+        .withColumn("cell", F.array_min(centroid_dists("_v", cells))["cid"])
         # Per-ROW precomputation hoisted out of the per-PAIR filter: the
         # double cast and the L2 norm depend on one row only, but inlined
         # in cosine_expr they re-ran per candidate pair (2 casts + 2 norm

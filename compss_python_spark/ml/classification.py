@@ -199,10 +199,9 @@ def gaussian_nb_exact(
     Fit = one groupBy(label) with per-dim avg/var_pop aggregates (map-side
     combine; shuffle carries k×dim partials).  The k-row class-stats table
     packs into ONE broadcast row (cid-sorted struct array) and scoring is a
-    per-row reduce — zero exchange on the test side, same shape as
-    `clustering.kmeans_lloyd`.  log P(c|x) ∝ ln(count_c) + Σⱼ[−½ln(2πσ²ⱼ)
-    − (xⱼ−μⱼ)²/(2σ²ⱼ)] (the −ln N prior term is class-constant → dropped);
-    ties toward the smaller label.
+    per-row reduce — zero exchange on the test side.  log P(c|x) ∝
+    ln(count_c) + Σⱼ[−½ln(2πσ²ⱼ) − (xⱼ−μⱼ)²/(2σ²ⱼ)] (the −ln N prior term
+    is class-constant → dropped); ties toward the smaller label.
     """
     import math
 
@@ -235,8 +234,8 @@ def gaussian_nb_exact(
     # struct ordering breaks ties toward the smaller label — the documented
     # contract.  The earlier F.reduce form evaluated loglik(s) TWICE per
     # class (when-condition + kept struct): a zip_with/aggregate over the
-    # full feature vector, re-run — the HOF lambda re-evaluation trap (same
-    # fix as clustering.kmeans_lloyd).
+    # full feature vector, re-run — the HOF lambda re-evaluation trap (the
+    # centroid argmin in compss_python_spark.centroids uses the same form).
     best = F.array_min(
         F.transform(
             F.col("_cs"),

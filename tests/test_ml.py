@@ -374,6 +374,46 @@ def test_kmeans_lloyd_fixed_init_partitions_all_points(spark, sf_dir):
     assert len(set(ra.values())) == 8
 
 
+def test_kmeans_lloyd_matches_numpy_lloyd_on_8_dim_vectors(spark):
+    """The update width comes from the data: 8-dim vectors cluster exactly
+    as a numpy Lloyd run does.  Init row 3 duplicates row 0, so cluster 3
+    loses every first-round tie to cluster 0 and must keep its centroid
+    while empty."""
+    from compss_python_spark.ml.clustering import kmeans_lloyd
+
+    rng = np.random.default_rng(11)
+    X = rng.normal(size=(120, 8))
+    X[3] = X[0]
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(X)],
+        "vec_id long, embedding array<double>",
+    )
+    init_ids, iters = [0, 40, 80, 3], 3
+    cents = X[init_ids].copy()
+    rounds = []
+    for _ in range(iters + 1):
+        assign = ((X[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+        rounds.append(assign)
+        cents = np.array([
+            X[assign == j].mean(axis=0) if (assign == j).any() else cents[j]
+            for j in range(len(init_ids))
+        ])
+    assert not (rounds[0] == 3).any()  # the empty-cluster path is exercised
+    got = {r["vec_id"]: r["cluster"] for r in kmeans_lloyd(df, init_ids, iters=iters).collect()}
+    assert got == {i: int(c) for i, c in enumerate(rounds[-1])}
+
+
+def test_kmeans_lloyd_rejects_a_nan_vector(spark):
+    """A NaN point drags its cluster's mean to NaN, which has no SQL
+    literal: the call raises instead of ranking clusters by NaN."""
+    from compss_python_spark.ml.clustering import kmeans_lloyd
+
+    vecs = [[0.0, 0.0], [5.0, 5.0], [0.1, 0.2], [float("nan"), 1.0]]
+    df = spark.createDataFrame(list(enumerate(vecs)), "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="non-finite"):
+        kmeans_lloyd(df, [0, 1], iters=1)
+
+
 def test_triangle_count_exact(spark):
     from compss_python_spark.graph.triangles import triangle_count
 

@@ -94,11 +94,21 @@ def test_hypertable_rollup_single_exchange(spark, sf_dir):
 
 
 def test_kmeans_lloyd_assignment_has_no_window(spark, sf_dir):
-    # the argmin must be a per-row reduce over the broadcast centroid array,
-    # not a Window.partitionBy(point) over the n×k cross product
+    # the argmin must be a per-row reduce over the centroid literal, not a
+    # Window.partitionBy(point) over the n×k cross product, and the
+    # driver-held centroids need no join or broadcast
     plan = _plan(spark, sf_dir, "ml_kmeans_lloyd_fixed_init")
     assert "Window" not in plan, "centroid assignment must not plan a window"
-    assert "BroadcastNestedLoopJoin" in plan  # 1-row centroid table broadcast
+    assert "Join" not in plan
+    assert "BroadcastExchange" not in plan
+
+
+def test_ivf_topk_quantizer_is_a_literal(spark, sf_dir):
+    # the cell assignment reads the centroids from the plan, not from a
+    # broadcast one-row DataFrame cross-joined onto each side
+    plan = _plan(spark, sf_dir, "similarity_topk_ivf_md5")
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "Scan ExistingRDD" not in plan
 
 
 def test_q5_broadcasts_all_dims(spark, sf_dir):
