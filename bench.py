@@ -75,20 +75,13 @@ def _timed(fn) -> float:
 def _release_stray_blocks(spark) -> None:
     """Between-query hygiene (UNtimed), extending the existing clearCache:
     also unpersist any RDD still persisted after a query completes —
-    localCheckpoint blocks (width.ensure_min_partitions pins, operators'
-    collapse barriers) are NOT covered by catalog.clearCache (it clears the
-    CacheManager, not RDD storage), so they accumulated across the 38×4
-    query executions and their memory/GC debt was billed to whichever
-    query ran later (the round-2 lesson's remaining half; measured as
-    end-of-run calibration drift 0.10 → 0.20 s).  Queries are independent
-    (each invocation rebuilds its own plan), so no live query state can be
-    referenced here."""
-    # Width-guard pins first via the library's own hook (also clears the
-    # pin registry so it doesn't grow across the 38×4 query executions);
-    # the generic sweep below then covers operator collapse barriers.
-    from compss_python_spark.caching import release_width_pins
-
-    release_width_pins(spark)
+    localCheckpoint blocks (operators' collapse barriers) are NOT covered
+    by catalog.clearCache (it clears the CacheManager, not RDD storage), so
+    they accumulated across the 38×4 query executions and their memory/GC
+    debt was billed to whichever query ran later (the round-2 lesson's
+    remaining half; measured as end-of-run calibration drift 0.10 → 0.20 s).
+    Queries are independent (each invocation rebuilds its own plan), so no
+    live query state can be referenced here."""
     sc = spark.sparkContext
     try:
         # Snapshot the RDD handles FIRST (r12 ADVICE): unpersisting while
@@ -213,11 +206,10 @@ def main() -> None:
                 fallback.add(name)
             samples[name].append(round(time.perf_counter() - t0, 3))
             spark.catalog.clearCache()
-            # Per QUERY, not per pass (r12 ADVICE): pinned width-guard /
-            # operator checkpoint blocks otherwise accumulate across all
-            # ~38 queries within a pass, re-introducing exactly the
-            # cross-query GC-debt bias this helper removes in the
-            # first_run and p+ loops.
+            # Per QUERY, not per pass (r12 ADVICE): operator checkpoint
+            # blocks otherwise accumulate across all ~38 queries within a
+            # pass, re-introducing exactly the cross-query GC-debt bias
+            # this helper removes in the first_run and p+ loops.
             _release_stray_blocks(spark)
     for name, spec in headline.items():
         if max(samples[name]) > 1.0:

@@ -23,35 +23,19 @@ lazy plan still reads) must NOT be released.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-# RDD ids of width-guard pins (width.ensure_min_partitions registers each
-# pin here at creation).  A pinned widened scan is the one checkpoint
-# DESIGNED to be shared across consumers, so :func:`release_checkpoint`
-# must never free it as a stray leaf of some caller's plan — a released
-# checkpoint cannot be recomputed (lineage is gone), so a mistaken release
-# of a shared leaf fails every other consumer unrecoverably instead of
-# just recomputing (r12 ADVICE).  Ids are per-SparkContext and
-# monotonically increasing (never reused), so a plain set is safe; it is
-# cleared by :func:`release_width_pins`.
-_WIDTH_PINS: set[int] = set()
-
-
-def register_width_pin(rdd_id: int) -> None:
-    """Record a width-guard pin's RDD id (called by width.py at creation)."""
-    _WIDTH_PINS.add(rdd_id)
+from pyspark.sql import DataFrame
 
 
 def release_checkpoint(df: DataFrame) -> None:
     """Unpersist every localCheckpoint RDD in ``df``'s analyzed plan.
 
     Walks the plan's leaves and unpersists each ``LogicalRDD`` (the node
-    ``localCheckpoint`` leaves behind) — EXCEPT width-guard pins
-    (:data:`_WIDTH_PINS`), which are shared-by-design across consumers and
-    released only via :func:`release_width_pins`.  Non-blocking; silently
-    ignores plans with no checkpointed leaves.  Never raises — releasing
-    storage is an optimization, not a correctness step, and a py4j hiccup
-    must not fail the operator.
+    ``localCheckpoint`` leaves behind).  Cached data (``persist()``, such
+    as the width guard's widened scan) is left to Spark's ``clearCache()``
+    / ``unpersist()``.  Non-blocking; silently ignores plans with no
+    checkpointed leaves.  Never raises — releasing storage is an
+    optimization, not a correctness step, and a py4j hiccup must not fail
+    the operator.
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
@@ -59,31 +43,6 @@ def release_checkpoint(df: DataFrame) -> None:
         for i in range(leaves.size()):
             leaf = leaves.apply(i)
             if leaf.getClass().getSimpleName() == "LogicalRDD":
-                rdd = leaf.rdd()
-                if rdd.id() not in _WIDTH_PINS:
-                    rdd.unpersist(False)
+                leaf.rdd().unpersist(False)
     except Exception:
         pass
-
-
-def release_width_pins(spark: SparkSession) -> None:
-    """Session-level release hook for width-guard pins (r12 ADVICE: the
-    pins otherwise have no release path outside bench.py's stray-block
-    sweep — a long-lived library session running narrow-input queries
-    would accumulate pinned MEMORY_AND_DISK blocks unboundedly).  Call it
-    between logical units of work, after the results that read the pinned
-    scans have been materialized; any pin a still-lazy plan references
-    would have to be recomputed-from-nothing and fail, same contract as
-    :func:`release_checkpoint`.  Never raises."""
-    try:
-        jsc = spark.sparkContext._jsc.sc()
-        it = jsc.getPersistentRDDs().iterator()
-        rdds = []
-        while it.hasNext():
-            rdds.append(it.next()._2())
-        for rdd in rdds:
-            if rdd.id() in _WIDTH_PINS:
-                rdd.unpersist(False)
-    except Exception:
-        pass
-    _WIDTH_PINS.clear()

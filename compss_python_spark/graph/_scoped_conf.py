@@ -32,27 +32,6 @@ from pyspark.sql import SparkSession
 _LOCK = threading.RLock()
 
 
-def parse_byte_size(s: str) -> int:
-    """Parse a Spark byte-size conf value ("256MB", "64m", "10485760b",
-    plain digits) to bytes.  Delegates to Spark's own JavaUtils when a JVM
-    is reachable so the accepted grammar matches Spark's exactly; falls
-    back to a local parse (used only if the JVM call fails)."""
-    s = s.strip()
-    try:
-        from pyspark import SparkContext
-
-        jvm = SparkContext._active_spark_context._jvm  # type: ignore[union-attr]
-        return int(jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s))
-    except Exception:
-        units = {"b": 1, "k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
-        low = s.lower().rstrip("b")
-        mult = 1
-        if low and low[-1] in units:
-            mult = units[low[-1]]
-            low = low[:-1]
-        return int(float(low or "0") * mult)
-
-
 @contextmanager
 def scoped_aqe_disabled(spark: SparkSession, disable: bool) -> Iterator[None]:
     """Turn AQE off for the scope when ``disable`` is True (no-op scope

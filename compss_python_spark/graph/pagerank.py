@@ -45,7 +45,6 @@ from pyspark.sql import types as T
 
 from compss_python_spark.caching import release_checkpoint
 from compss_python_spark.graph._scoped_conf import (
-    parse_byte_size,
     scoped_aqe_disabled,
     scoped_shuffle_partitions,
 )
@@ -84,18 +83,10 @@ def _loop_conf_gates(spark, n_edges: int, n_nodes: int) -> tuple[bool, bool]:
       power-law graph at scale the gates keep AQE ON: either bound
       growing past its threshold re-enables the full machinery.
     """
-    try:
-        bcast_thr = parse_byte_size(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-        )
-        skew_thr = parse_byte_size(
-            spark.conf.get(
-                "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-                "256MB",
-            )
-        )
-    except Exception:
-        return False, False
+    conf = spark._jsparkSession.sessionState().conf()
+    sql_conf = spark._jvm.org.apache.spark.sql.internal.SQLConf
+    bcast_thr = conf.autoBroadcastJoinThreshold()
+    skew_thr = conf.getConf(sql_conf.SKEW_JOIN_SKEWED_PARTITION_THRESHOLD())
     broadcast_ranks = bcast_thr > 0 and n_nodes * _BCAST_BYTES_PER_NODE <= bcast_thr
     aqe_off = broadcast_ranks and n_edges * _SHUFFLE_BYTES_PER_EDGE <= skew_thr
     return aqe_off, broadcast_ranks

@@ -253,7 +253,7 @@ def minhash_lsh_pairs(
         # exact-hash → member→rep edges + LSH over representatives only.
         # The document text never shuffles: reps rejoin the input by id.
         #
-        # Widen the SCAN once, up front, and share the pinned copy between
+        # Widen the SCAN once, up front, and share the cached copy between
         # the two text-dense consumers (the \s+ normalization regex here
         # and the signature chain in the recursive call): both otherwise
         # stream a one-split local input on one core.
@@ -268,7 +268,7 @@ def minhash_lsh_pairs(
         #   inherits the NARROW scan width and the text-dense shingle
         #   stage below it runs single-core (measured 8.6 s warm vs 1.1 s
         #   properly widened) unless it is re-widened — a SECOND
-        #   widen+pin of the full join output, after an
+        #   widen+cache of the full join output, after an
         #   `ensure_min_partitions` `df.rdd` probe that EXECUTES the
         #   broadcast build just to read the partition count;
         # - at corpus scale the rep list (≈ one id per distinct document)
@@ -307,7 +307,7 @@ def minhash_lsh_pairs(
             wide, id_col, text_col, num_hashes, bands, shingle_n,
             threshold, max_bucket, drop_metrics, collapse_exact=False,
             # honest width claim: `wide` is already ≥ session parallelism,
-            # and the probe on a lazily-pinned plan is not free
+            # and the probe on a lazily-cached plan is not free
             input_partitions=wide.sparkSession.sparkContext.defaultParallelism,
             _rep_ids=reps.select(F.col("_rep").alias("_id")),
         )

@@ -656,7 +656,7 @@ def synthesize_real_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     # pack — measured at sf0.1 (min-of-3, alternated arms, twice): probe
     # 1.6–2.9 s widened vs 0.65–1.1 s narrow, wav_frame_features 1.7–2.9
     # vs 0.96–1.35, wav_sample_stats 1.9–3.0 vs 0.80–1.08.  The widen's
-    # shuffle + pin + 32-task Python fan-out costs more than the serial
+    # shuffle + cache + 32-task Python fan-out costs more than the serial
     # chain it parallelizes; at production widths the guard would be a
     # no-op anyway, so narrow loses nothing at scale.  (The pixel-decode
     # heads measured the OPPOSITE — png 1.06 vs 2.45, video 1.2 vs 6.1 —

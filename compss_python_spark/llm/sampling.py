@@ -277,7 +277,7 @@ def dsir_importance_weights(
     # Widen one-split local scans before the gram explodes — the md5-dense
     # tokenize→explode runs BELOW the first exchange, so on a narrow input
     # all three gram passes serialized on one core (no-op at scale; the
-    # pin also shares the widened raw scan between its two explodes).
+    # cache also shares the widened raw scan between its two explodes).
     raw = ensure_min_partitions(raw)
     target = ensure_min_partitions(target)
 

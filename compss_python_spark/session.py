@@ -25,6 +25,12 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def default_driver_memory(physical_bytes: int) -> str:
+    """Half of physical memory, capped at 32g, as a ``spark.driver.memory``
+    value in MiB — in local mode the driver is the only JVM."""
+    return f"{min(physical_bytes // 2, 32 * 1024**3) // 1024**2}m"
+
+
 def get_spark(
     app_name: str = "compss_python_spark",
     cpus: int | None = None,
@@ -66,9 +72,18 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local-mode driver == the only JVM: give it real headroom (the
-        # 10× probe's gram explodes GC-thrash a 16g heap; the box has
-        # 128 GiB).  On a cluster, spark-submit's --driver-memory wins.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # 10× probe's gram explodes GC-thrash a 16g heap) without asking
+        # for more than the host has.  On a cluster, spark-submit's
+        # --driver-memory wins.
+        .config(
+            "spark.driver.memory",
+            os.environ.get(
+                "SPARK_GRAFT_DRIVER_MEM",
+                default_driver_memory(
+                    os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+                ),
+            ),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -18,13 +18,10 @@ from pyspark.sql import DataFrame
 
 
 def ensure_min_partitions(
-    df: DataFrame,
-    target: int | None = None,
-    input_partitions: int | None = None,
-    pin: bool = True,
+    df: DataFrame, input_partitions: int | None = None
 ) -> DataFrame:
-    """Round-robin repartition ``df`` up to ``target`` partitions (default:
-    the session's scheduler parallelism) iff it is currently narrower.
+    """Round-robin repartition ``df`` up to the session's scheduler
+    parallelism iff it is currently narrower, and cache the widened copy.
 
     Width is taken from the ``input_partitions`` hint when the caller knows
     it (production jobs reading hundreds of splits should pass any number
@@ -34,43 +31,25 @@ def ensure_min_partitions(
     planning but no job.  Returns ``df`` unchanged when already wide
     enough, so at-scale inputs never pay a shuffle.
 
-    ``pin`` (default True): when the widening shuffle DOES fire, the result
-    is additionally lazily ``localCheckpoint``-ed.  Without the barrier,
-    Catalyst pushes deterministic filters back DOWN through the round-robin
-    exchange, so the expensive predicate the caller is widening FOR (the
-    quality-regex filter, tokenize-dense dedup keys) runs on the original
-    narrow split — measured at sf0.1: the curation pipeline's giant regex
-    filter evaluated on ONE core below the exchange, 5.7 s vs 2.9 s with
-    the pin.  The barrier also lets multi-consumer plans (decontaminate's
-    three doc branches, duplicate-gram model + hit join) share one widened
-    copy instead of re-running scan + exchange per branch.  The pinned
-    blocks live until the caller's session releases them
-    (caching.release_checkpoint) — bounded by the narrow-input regime this
-    guard exists for; at production widths the guard (and the pin) is a
-    no-op, so recompute semantics and scan pushdown at scale are untouched.
+    When the widening shuffle DOES fire, the result is ``persist()``-ed.
+    The cached relation is a leaf of the optimized plan, so it is a
+    barrier: without it Catalyst pushes deterministic filters back DOWN
+    through the round-robin exchange, and the expensive predicate the
+    caller is widening FOR (the quality-regex filter, tokenize-dense dedup
+    keys) runs on the original narrow split — measured at sf0.1: the
+    curation pipeline's giant regex filter evaluated on ONE core below the
+    exchange, 5.7 s vs 2.9 s above it.  The cache also lets multi-consumer
+    plans (decontaminate's three doc branches, duplicate-gram model + hit
+    join) share one widened copy instead of re-running scan + exchange per
+    branch; Spark's CacheManager serves any equal plan.  Unlike a
+    checkpoint the copy keeps its lineage, so dropping its blocks never
+    breaks a plan that still reads it: ``spark.catalog.clearCache()`` (or
+    ``unpersist()``) releases it and a later read recomputes.
     """
-    sc = df.sparkSession.sparkContext
-    if target is None:
-        target = sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if target <= 1:
         return df
     width = input_partitions if input_partitions is not None else df.rdd.getNumPartitions()
     if width >= target:
         return df
-    out = df.repartition(target)
-    if not pin:
-        return out
-    pinned = out.localCheckpoint(eager=False)
-    # Register the pin's RDD id (caching._WIDTH_PINS) so (a)
-    # caching.release_checkpoint never frees a shared widened scan as a
-    # stray leaf of one consumer's plan, and (b) callers outside the bench
-    # harness have a release path (caching.release_width_pins) — r12
-    # ADVICE flagged both.
-    try:
-        from compss_python_spark.caching import register_width_pin
-
-        plan = pinned._jdf.queryExecution().analyzed()
-        register_width_pin(plan.rdd().id())
-    except Exception:
-        pass
-    return pinned
+    return df.repartition(target).persist()

@@ -25,9 +25,6 @@ def _n_persistent(spark) -> int:
 def _sweep(spark) -> None:
     """Release every persisted block (same shape as bench.py's untimed
     inter-query hygiene) so the baseline for the delta is clean."""
-    from compss_python_spark.caching import release_width_pins
-
-    release_width_pins(spark)
     sc = spark.sparkContext._jsc.sc()
     it = sc.getPersistentRDDs().iterator()
     rdds = []
@@ -73,23 +70,13 @@ def test_kmeans_lloyd_leaves_at_most_one_checkpoint(spark, sf_dir):
 
 
 def test_lsh_cc_pipeline_leaves_at_most_one_checkpoint(spark, sf_dir):
-    from compss_python_spark import caching
     from compss_python_spark.caching import release_checkpoint
     from compss_python_spark.graph.components import connected_components
     from compss_python_spark.llm import dedup
     from compss_python_spark.plans import table
 
-    def _non_pin_persistent() -> int:
-        sc = spark.sparkContext._jsc.sc()
-        it = sc.getPersistentRDDs().iterator()
-        n = 0
-        while it.hasNext():
-            if it.next()._1() not in caching._WIDTH_PINS:
-                n += 1
-        return n
-
     _sweep(spark)
-    base = _non_pin_persistent()
+    base = _n_persistent(spark)
     docs = table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(docs, threshold=0.5, collapse_exact=True)
     # local_threshold=0 forces the distributed label-propagation loop.
@@ -97,25 +84,24 @@ def test_lsh_cc_pipeline_leaves_at_most_one_checkpoint(spark, sf_dir):
         pairs, src="id_a", dst="id_b", local_threshold=0
     )
     comp.count()
-    # Besides the session-lived width pin (released only via the session
-    # hook, counted out above): the pair table's collapse barrier is
-    # released once the eager pair result exists and the CC loop releases
-    # each superseded label table, so only the pair result and the final
-    # labels may remain.
-    assert _non_pin_persistent() - base <= 2
+    # The widened scan is a cache, dropped by clearCache.  The pair
+    # table's collapse barrier is released once the eager pair result
+    # exists and the CC loop releases each superseded label table, so only
+    # the pair result and the final labels may remain.
+    spark.catalog.clearCache()
+    assert _n_persistent(spark) - base <= 2
     release_checkpoint(comp)
     release_checkpoint(pairs)
-    assert _non_pin_persistent() - base == 0
-    caching.release_width_pins(spark)
+    assert _n_persistent(spark) - base == 0
     assert _n_persistent(spark) == 0
 
 
-def test_release_checkpoint_skips_width_pins(spark):
-    """A width-guard pin is shared-by-design across consumers;
-    release_checkpoint must not free it as a stray leaf of one consumer's
-    plan (r12 ADVICE: a released checkpoint cannot be recomputed, so a
-    mistaken release fails the other consumers unrecoverably)."""
-    from compss_python_spark import caching
+def test_widened_scan_survives_a_full_sweep(spark):
+    """The width guard's widened scan is shared by its consumers and
+    keeps its lineage: neither releasing one consumer's checkpoints, nor
+    unpersisting every RDD, nor clearing the cache can break another
+    consumer, and clearCache leaves no storage behind."""
+    from compss_python_spark.caching import release_checkpoint
     from compss_python_spark.width import ensure_min_partitions
 
     _sweep(spark)
@@ -125,9 +111,8 @@ def test_release_checkpoint_skips_width_pins(spark):
     consumer_a = widened.selectExpr("sum(id) as s")
     consumer_b = widened.selectExpr("count(*) as c")
     assert consumer_a.first()["s"] == 499500
-    # Releasing one consumer's plan must leave the shared pin alive …
-    caching.release_checkpoint(consumer_a)
+    release_checkpoint(consumer_a)
+    _sweep(spark)
+    spark.catalog.clearCache()
     assert consumer_b.first()["c"] == 1000
-    # … and the session-level hook is the designated release path.
-    caching.release_width_pins(spark)
     assert _n_persistent(spark) - base == 0

@@ -836,3 +836,23 @@ def test_personalized_pagerank_mass_and_locality(spark):
         personalized_pagerank(
             e, spark.createDataFrame([(999,)], "node long")
         ).collect()
+
+
+def test_pagerank_loop_gates_read_the_session_thresholds(spark):
+    """Both gates read Spark's typed thresholds: -1 (broadcast disabled)
+    turns both off, and at 10MB they follow the bounded sizes."""
+    from compss_python_spark.graph.pagerank import _loop_conf_gates
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        assert _loop_conf_gates(spark, n_edges=1000, n_nodes=100) == (False, False)
+        spark.conf.set(key, "10MB")
+        assert _loop_conf_gates(spark, n_edges=1000, n_nodes=100) == (True, True)
+        # ranks above 10MB / 64 B per node: no broadcast, so AQE stays on
+        assert _loop_conf_gates(spark, n_edges=1000, n_nodes=200_000) == (False, False)
+        # contribution shuffle above the 256MB skew threshold / 32 B per edge
+        assert _loop_conf_gates(spark, n_edges=10_000_000, n_nodes=100) == (False, True)
+    finally:
+        spark.conf.set(key, prev)

@@ -275,8 +275,6 @@ def test_ensure_min_partitions_guard(spark):
     # already-wide input returns the SAME plan — no shuffle added
     wide = spark.range(1000).repartition(spark.sparkContext.defaultParallelism + 4)
     assert ensure_min_partitions(wide) is wide
-    # explicit small target is a no-op too
-    assert ensure_min_partitions(narrow, target=1) is narrow
 
     # input_partitions hint skips the physical-plan probe entirely:
     # a declared-wide input returns unchanged even though it is narrow,
@@ -286,6 +284,25 @@ def test_ensure_min_partitions_guard(spark):
         ensure_min_partitions(narrow, input_partitions=1).rdd.getNumPartitions()
         == spark.sparkContext.defaultParallelism
     )
+
+
+def test_ensure_min_partitions_is_a_filter_barrier(spark):
+    """The widened copy is a cached leaf: a filter over it stays above the
+    cache, so it runs on the widened partitions instead of being pushed
+    below the round-robin exchange onto the one narrow split."""
+    from compss_python_spark.width import ensure_min_partitions
+
+    narrow = spark.range(1000).coalesce(1).selectExpr("id", "cast(id as string) as s")
+    widened = ensure_min_partitions(narrow)
+    plan = (
+        widened.filter(F.col("s").rlike("^1.*7$"))
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    above, below = plan.split("InMemoryRelation", 1)
+    assert above.lstrip().startswith("Filter")
+    assert "RoundRobinPartitioning" in below
+    assert "Filter" not in below.split("RoundRobinPartitioning", 1)[1]
+    widened.unpersist()
 
 
 def test_asof_join_directions_and_tolerance(spark):
