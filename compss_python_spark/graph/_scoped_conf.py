@@ -11,14 +11,13 @@ on the same session while a loop is in flight.  The contract here:
   scope, so the returned DataFrame never depends on the narrowed value;
 - a process-wide lock serializes scopes, so two concurrent loops can never
   interleave set/restore and leave the wrong width behind;
-- other concurrent queries on the same session would still observe the
-  narrowed width for the duration of the loop — callers that share a
-  session across threads should pass ``num_partitions`` equal to the
-  session default to opt out of narrowing.
+- other concurrent queries on the same session still observe the
+  narrowed width for the duration of the loop.
 
-On a 1000-executor cluster the width formula (~2 M edges/partition,
-capped at the session default) leaves big graphs at the full default
-width, so the narrowing is a small-input optimization only.
+On a 1000-executor cluster the width formula (edges per partition capped
+at the session default; see :func:`scoped_shuffle_partitions`) leaves big
+graphs at the full default width, so the narrowing is a small-input
+optimization only.
 """
 
 from __future__ import annotations
@@ -56,9 +55,12 @@ def scoped_aqe_disabled(spark: SparkSession, disable: bool) -> Iterator[None]:
 
 
 @contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int) -> Iterator[int]:
-    """Set ``spark.sql.shuffle.partitions`` to ``n`` for the scope, and pin
-    AQE partition COALESCING off inside it.
+def scoped_shuffle_partitions(
+    spark: SparkSession, n_edges: int, edges_per_partition: int
+) -> Iterator[None]:
+    """Set ``spark.sql.shuffle.partitions`` to the loop width
+    ``max(1, min(session default, n_edges // edges_per_partition + 1))``
+    for the scope, and pin AQE partition COALESCING off inside it.
 
     The loop width is already size-derived; letting AQE re-coalesce each
     iteration's exchanges (a) second-guesses that choice per stage and (b)
@@ -68,17 +70,17 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int) -> Iterator[int]:
     coalescing on 2.96 s min / off 2.51 s (~15%).  AQE itself stays ON
     (skew-join splitting is still wanted on power-law graphs).
 
-    Yields the previous (default) width; restores both confs on exit.
-    Reentrant and serialized across threads.
+    Restores both confs on exit.  Reentrant and serialized across threads.
     """
     with _LOCK:
         default = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        n = max(1, min(default, n_edges // edges_per_partition + 1))
         coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
         prev_coalesce = spark.conf.get(coalesce_key, "true")
         spark.conf.set("spark.sql.shuffle.partitions", str(n))
         spark.conf.set(coalesce_key, "false")
         try:
-            yield default
+            yield
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", str(default))
             spark.conf.set(coalesce_key, prev_coalesce)

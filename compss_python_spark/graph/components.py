@@ -37,7 +37,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iters: int = 20,
-    num_partitions: int | None = None,
     local_threshold: int = 4_000_000,
     algorithm: str = "label",
 ) -> DataFrame:
@@ -111,11 +110,8 @@ def connected_components(
         finally:
             c.unpersist()
     e = c.union(c.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    if num_partitions is None:
-        default_p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        num_partitions = max(1, min(default_p, n_edges // 2_000_000 + 1))
     try:
-        with scoped_shuffle_partitions(spark, num_partitions):
+        with scoped_shuffle_partitions(spark, n_edges, 2_000_000):
             if algorithm == "star":
                 labels = _cc_star(c, max_iters)
             else:

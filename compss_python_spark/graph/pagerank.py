@@ -1,14 +1,25 @@
 """PageRank over an edge table (SURVEY.md §2.9 #68).
 
 Reference [ref: ddf_library/functions/graph/pagerank.py]: iterative
-rank ⋈ edge joins until max_iters.  Spark-first: the same dataflow as
-DataFrame joins/aggs, with two scale-critical choices the reference lacks:
+rank ⋈ edge joins until max_iters.  Global PageRank is personalized
+PageRank with every node a seed, so :func:`pagerank` and
+:func:`personalized_pagerank` run ONE kernel, :func:`_pagerank`, that
+differs between them only in the restart vector r (1/n on every node, or
+1/|S| on the seeds S, 0 elsewhere):
+
+    rank' = (1−d)·r + d·(contrib + m·r),   m = 1 − Σcontrib
+
+Dangling nodes (no out-links) restart their mass along r, so Σrank = 1
+every iteration, matching the standard formulation (and networkx) rather
+than leaking mass.  Spark-first: the same dataflow as DataFrame
+joins/aggs, with scale-critical choices the reference lacks:
 
 - **Plan-growth control**: each iteration extends the logical plan; a LAZY
-  `localCheckpoint` every few iterations truncates lineage so Catalyst/AQE
-  re-planning cost stays constant (SURVEY.md §7 hard part 3).  Measured at
-  sf0.1: checkpoint_every=5 → 17 s for 8 iterations, =2 → 4.6 s — the
-  accumulated-plan AQE re-optimization, not data volume, dominates.
+  `localCheckpoint` every `_CHECKPOINT_EVERY` iterations truncates lineage
+  so Catalyst/AQE re-planning cost stays constant (SURVEY.md §7 hard part
+  3).  Measured at sf0.1: every 5 → 17 s for 8 iterations, every 2 →
+  4.6 s — the accumulated-plan AQE re-optimization, not data volume,
+  dominates; the 10× sweep in SCALE.md re-confirms 2 as the optimum.
 - **Partitioning reuse**: edges are hash-partitioned once on src and
   persisted; every iteration's join reuses that layout, so only the small
   rank table shuffles per iteration.
@@ -17,20 +28,22 @@ DataFrame joins/aggs, with two scale-critical choices the reference lacks:
   8 iterations × 3 stages, empty-task scheduling dominates wall-clock on
   small graphs (measured at sf0.1: 32 shuffle partitions → 7.5 s, 8 → 4.3 s
   for the same 8 iterations).  The loop therefore runs under a shuffle
-  partition count derived from the edge count (~2 M edges/partition,
+  partition count derived from the edge count (~500 k edges/partition,
   capped at the session default) — a huge graph still gets the full
   default width.  The conf scope is lock-serialized and the final ranks
   are materialized (eager localCheckpoint) inside it; see
   graph/_scoped_conf.py for the concurrency contract.
 - **Gate-sized setup**: the regime gate counts the distinct-edge cache the
   loop needs anyway (never the raw edge SOURCE — re-executing a join-shaped
-  source to count it dominated the 10× probe); the node count (init +
-  dangling) is a narrow count of the persisted node list the distributed
-  loop materializes anyway — no standalone distinct-id aggregate runs
-  (a second 600 M-row cache pass dominated the 100× probe in round 7).
-
-Dangling nodes (no out-links) redistribute their mass uniformly, matching
-the standard formulation (and networkx) rather than leaking mass.
+  source to count it dominated the 10× probe); the node count, seed count
+  and key width are one aggregate over the persisted node list the
+  distributed loop materializes anyway — no standalone distinct-id
+  aggregate runs (a second 600 M-row cache pass dominated the 100× probe
+  in round 7).
+- **Type-aware broadcast gate**: the rank table is broadcast when
+  n_nodes × (56 B + key width) fits the session's broadcast threshold;
+  the key width is the type's fixed size, or the measured mean byte
+  length for string and binary keys.
 
 All persisted helpers (distinct edges, node list, weighted edges) are
 released before returning; the returned DataFrame is a checkpointed leaf
@@ -52,22 +65,32 @@ from compss_python_spark.graph._scoped_conf import (
 # Conservative serialized-bytes bounds for the loop-conf gates below:
 # a contribution-shuffle row is (node key, double) ≈ 16 B payload; 32 B
 # covers codec/framing overhead.  A broadcast rank row (node, rank) in a
-# built hash relation costs ≈ 64 B with object overhead.
+# built hash relation costs ≈ 56 B of object overhead plus the node key.
 _SHUFFLE_BYTES_PER_EDGE = 32
-_BCAST_BYTES_PER_NODE = 64
+_BCAST_BYTES_PER_ROW = 56
+_CHECKPOINT_EVERY = 2
+# Loop width: measured optimum on a 5.9M-edge graph at local[32] (16
+# partitions: 12.6 s vs 3: 16.7 s vs 32: 19.2 s for 8 iterations); graphs
+# below the local_threshold never reach the loop, so the scheduling-
+# overhead regime that favored fewer partitions is served by the driver
+# kernel.
+_EDGES_PER_PARTITION = 500_000
 
 
-def _loop_conf_gates(spark, n_edges: int, n_nodes: int) -> tuple[bool, bool]:
+def _loop_conf_gates(
+    spark, n_edges: int, n_nodes: int, key_bytes: float
+) -> tuple[bool, bool]:
     """Decide (aqe_off, broadcast_ranks) for the iteration loop from the
     MEASURED graph size against the session's own thresholds — never a
     constant tuned for local mode (both gates are no-ops at 100 TB).
 
     - ``broadcast_ranks``: hint the (node, rank) side of the contribution
-      join broadcast when its bounded size fits the session's
-      autoBroadcastJoinThreshold.  The rank table is a per-iteration
-      derived plan whose size estimate is unknown, so the static planner
-      never broadcasts it unhinted and AQE re-discovers the conversion
-      every iteration at replan cost; the hint makes it deterministic.
+      join broadcast when n_nodes × (56 B + ``key_bytes``) fits the
+      session's autoBroadcastJoinThreshold.  The rank table is a
+      per-iteration derived plan whose size estimate is unknown, so the
+      static planner never broadcasts it unhinted and AQE re-discovers the
+      conversion every iteration at replan cost; the hint makes it
+      deterministic.
     - ``aqe_off``: disable AQE inside the loop scope ONLY when both
       (a) the whole per-iteration contribution shuffle, bounded by
       n_edges × 32 B, is smaller than the AQE skew-split threshold —
@@ -87,7 +110,8 @@ def _loop_conf_gates(spark, n_edges: int, n_nodes: int) -> tuple[bool, bool]:
     sql_conf = spark._jvm.org.apache.spark.sql.internal.SQLConf
     bcast_thr = conf.autoBroadcastJoinThreshold()
     skew_thr = conf.getConf(sql_conf.SKEW_JOIN_SKEWED_PARTITION_THRESHOLD())
-    broadcast_ranks = bcast_thr > 0 and n_nodes * _BCAST_BYTES_PER_NODE <= bcast_thr
+    rank_bytes = n_nodes * (_BCAST_BYTES_PER_ROW + key_bytes)
+    broadcast_ranks = bcast_thr > 0 and rank_bytes <= bcast_thr
     aqe_off = broadcast_ranks and n_edges * _SHUFFLE_BYTES_PER_EDGE <= skew_thr
     return aqe_off, broadcast_ranks
 
@@ -98,20 +122,9 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     max_iters: int = 10,
-    checkpoint_every: int = 2,
-    num_partitions: int | None = None,
     local_threshold: int = 4_000_000,
-    edges_unique: bool = False,
 ) -> DataFrame:
     """Returns (node, rank) with Σrank = 1 (uniform init, dangling-aware).
-
-    ``edges_unique=True`` is a caller CONTRACT that the (src, dst) pairs
-    are already deduplicated — the survivors pipeline's component edges
-    and pre-distincted fixtures qualify — and skips the distinct exchange
-    entirely (the single most expensive stage at the 100× probe: the
-    distinct over a 600 M-row join feed dominated the 56.7 s wall).
-    Duplicate edges under the contract silently over-weight their source's
-    contribution, so assert it only when the producer guarantees it.
 
     Two physical strategies, chosen by measured edge count (the same
     bounded-small-side adaptivity as Spark's broadcast-join threshold and
@@ -120,18 +133,56 @@ def pagerank(
     - ``2·distinct edges ≤ local_threshold`` (default 4M edges ≈ 64 MB at
       16 B/edge, the session's broadcast-join threshold) → vectorized numpy
       power iteration on the driver over the collected (src, dst) pairs,
-      identical update formula, zero shuffles beyond the distinct.  A graph that fits in a few MB gains nothing
-      from a multi-stage-per-iteration distributed loop (scheduling
-      dominates by 10–100×).  ``local_threshold=0`` forces the loop.
+      identical update formula, zero shuffles beyond the distinct.  A
+      graph that fits in a few MB gains nothing from a multi-stage-per-
+      iteration distributed loop (scheduling dominates by 10–100×).
+      ``local_threshold=0`` forces the loop.
     - larger → the distributed loop (the 100 TB path): edges
       hash-partitioned once, one rank shuffle per iteration, dangling mass
-      via the broadcast aggregate identity.
-
-    ``num_partitions`` overrides the size-derived loop shuffle width; the
-    session's ``spark.sql.shuffle.partitions`` is temporarily scoped to it
-    (restored before returning — the result is eagerly materialized inside
-    the scope, so callers never observe the override).
+      via the broadcast aggregate identity.  The session's
+      ``spark.sql.shuffle.partitions`` is scoped to a size-derived width
+      (restored before returning — the result is eagerly materialized
+      inside the scope, so callers never observe the override).
     """
+    return _pagerank(edges, None, src, dst, damping, max_iters, local_threshold)
+
+
+def personalized_pagerank(
+    edges: DataFrame,
+    seeds: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    seed_col: str = "node",
+    damping: float = 0.85,
+    max_iters: int = 10,
+    local_threshold: int = 4_000_000,
+) -> DataFrame:
+    """Personalized PageRank: random walk with restart into the SEED set
+    (uniform over the seeds that are nodes of the graph) instead of the
+    whole graph — the similarity / recommendation workhorse (\"nodes
+    relevant to THESE nodes\").  Dangling mass restarts into the seed
+    distribution, so Σrank = 1 every iteration.  Same strategies as
+    :func:`pagerank`; the restart vector is a seed-flag column on the
+    persisted node list (seed set broadcast into that one join — no
+    per-iteration seed shuffles), and the driver kernel collects only the
+    seed ids that are nodes of the (bounded) graph.  Raises
+    ``ValueError`` when no seed is a node of the graph.
+    """
+    seed_set = seeds.select(F.col(seed_col).alias("node")).distinct()
+    return _pagerank(edges, seed_set, src, dst, damping, max_iters, local_threshold)
+
+
+def _pagerank(
+    edges: DataFrame,
+    seed_set: DataFrame | None,
+    src: str,
+    dst: str,
+    damping: float,
+    max_iters: int,
+    local_threshold: int,
+) -> DataFrame:
+    """The one PageRank kernel: restart vector 1/n on every node when
+    ``seed_set`` is None, else 1/|S ∩ graph| on the seeds."""
     spark = edges.sparkSession
     # Null-keyed edges are excluded by contract on BOTH paths (a null
     # endpoint would otherwise survive as a meaningless node on the
@@ -139,51 +190,131 @@ def pagerank(
     d = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
-    # Preamble job accounting (the 100× probe's dominant cost — history:
-    # the round-6 raw-count gate re-executed a join-shaped SOURCE purely
-    # to decide the gate; round 7 counted the cached distinct edges but
-    # paid a SECOND 600 M-row cache pass for the node count_distinct).
-    # Now the gate costs ONE cheap count of the cached distinct edges,
-    # and the node count comes free: the distributed loop materializes a
-    # distinct node list anyway, so n_nodes is a narrow count of THAT
-    # cached table inside the loop scope — no standalone distinct-id
-    # aggregate ever runs.  Under the edges_unique contract the edge
-    # distinct itself is skipped too.
-    e = (d if edges_unique else d.distinct()).persist()
+    # The gate costs ONE count, which also materializes the distinct-edge
+    # cache both paths read.
+    e = d.distinct().persist()
     n_edges = e.count()
+    node_ids = (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
     if local_threshold and 2 * n_edges <= local_threshold:
         try:
-            # Collect from the CACHED deduped edges (bounded by the gate).
-            return _pagerank_local(e, damping, max_iters)
+            # Seed ids are intersected with the (bounded) graph's node set
+            # before the collect, so an oversized seed table cannot blow
+            # the driver.
+            seed_ids = (
+                None
+                if seed_set is None
+                else [r["node"] for r in seed_set.join(node_ids, "node").collect()]
+            )
+            return _pagerank_local(e, damping, max_iters, seed_ids)
         finally:
             e.unpersist()
-    if num_partitions is None:
-        # ~500k edges/partition: measured optimum on a 5.9M-edge graph at
-        # local[32] (16 partitions: 12.6 s vs 3: 16.7 s vs 32: 19.2 s for 8
-        # iterations); graphs below the local_threshold never reach here,
-        # so the scheduling-overhead regime that favored fewer partitions
-        # is already served by the driver kernel.
-        default_p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        num_partitions = max(1, min(default_p, n_edges // 500_000 + 1))
+    node_type = e.schema["src"].dataType
+    measure_key = isinstance(node_type, (T.StringType, T.BinaryType))
     helpers: list[DataFrame] = [e]
     ckpts: list[DataFrame] = []
     try:
-        with scoped_shuffle_partitions(spark, num_partitions):
-            nodes = (
-                e.select(F.col("src").alias("node"))
-                .union(e.select(F.col("dst").alias("node")))
-                .distinct()
-                .repartition("node")
-                .persist()
-            )
-            helpers.append(nodes)
-            n_nodes = nodes.count()  # cached-side narrow job; materializes nodes
-            aqe_off, bcast = _loop_conf_gates(spark, n_edges, n_nodes)
-            with scoped_aqe_disabled(spark, aqe_off):
-                ranks, loop_helpers, ckpts = _pagerank_loop(
-                    e, nodes, n_nodes, damping, max_iters, checkpoint_every, bcast
+        with scoped_shuffle_partitions(spark, n_edges, _EDGES_PER_PARTITION):
+            nodes = node_ids
+            stats = [F.count("*").alias("_n")]
+            if seed_set is not None:
+                nodes = nodes.join(
+                    F.broadcast(seed_set.withColumn("_s", F.lit(True))), "node", "left"
                 )
-                helpers += loop_helpers
+                stats.append(F.sum(F.col("_s").cast("long")).alias("_ns"))
+            if measure_key:
+                stats.append(F.avg(F.octet_length("node")).alias("_kb"))
+            nodes = nodes.repartition("node").persist()
+            helpers.append(nodes)
+            # One cached-side aggregate materializes the node list and
+            # measures everything the restart vector and the gates need.
+            # Restart mass is defined over seeds ∩ graph (an out-of-graph
+            # seed would silently leak Σrank below 1).
+            cnt = nodes.agg(*stats).first()
+            n_nodes = cnt["_n"]
+            if seed_set is None:
+                r = F.lit(1.0 / n_nodes)
+            else:
+                n_seeds = cnt["_ns"] or 0
+                if n_seeds == 0:
+                    raise ValueError(
+                        "personalized_pagerank: no seed is a node of the graph"
+                    )
+                r = F.when(F.col("_s"), F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
+            key_bytes = (
+                (cnt["_kb"] or 0.0)
+                if measure_key
+                else spark._jvm.org.apache.spark.sql.types.DataType.fromJson(
+                    node_type.json()
+                ).defaultSize()
+            )
+            aqe_off, bcast = _loop_conf_gates(spark, n_edges, n_nodes, key_bytes)
+            with scoped_aqe_disabled(spark, aqe_off):
+                out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
+                edges_w = (
+                    e.join(out_deg, "src")
+                    .select("src", "dst", (F.lit(1.0) / F.col("deg")).alias("w"))
+                    .repartition("src")
+                    .persist()
+                )
+                helpers.append(edges_w)
+                # Note: a source-nodes-only loop state (sinks' ranks never
+                # feed back; full-node update once at the end) was MEASURED
+                # SLOWER on a 5.9M-edge graph at every width (16.6 s vs
+                # 12.6 s at 16 partitions, 8 iterations) — the saved
+                # all-nodes join is cheap against the persisted node list,
+                # and the extra plan nodes cost more than the exchange they
+                # remove.  Keeping the simpler full-node state.
+                ranks = nodes.select("node", r.alias("rank"))
+                for i in range(max_iters):
+                    r_side = ranks.withColumnRenamed("node", "src")
+                    if bcast:
+                        # Size-gated: the edge side then never exchanges,
+                        # and the only per-iteration shuffle left is the
+                        # map-side-combined contribution aggregate.
+                        r_side = F.broadcast(r_side)
+                    contribs = (
+                        edges_w.join(r_side, "src")
+                        .groupBy(F.col("dst").alias("node"))
+                        .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
+                    )
+                    # Dangling mass via the aggregate identity m = 1 − Σcontrib
+                    # (Σcontrib = Σ rank over NON-dangling nodes, since each
+                    # such node's rank splits exactly into its out-edge
+                    # contributions).  This avoids a second reference to
+                    # `ranks` (no per-iteration persist needed) and the
+                    # left-anti dangling join — one aggregate over the
+                    # already-shuffled contribs, kept in the plan as a
+                    # broadcast 1-row table so no per-iteration blocking job
+                    # runs.
+                    total = contribs.agg(
+                        F.coalesce(F.sum("contrib"), F.lit(0.0)).alias("_tc")
+                    )
+                    ranks = (
+                        nodes.join(contribs, "node", "left")
+                        .crossJoin(F.broadcast(total))
+                        .select(
+                            "node",
+                            (
+                                F.lit(1.0 - damping) * r
+                                + F.lit(damping)
+                                * (
+                                    F.coalesce(F.col("contrib"), F.lit(0.0))
+                                    + (F.lit(1.0) - F.col("_tc")) * r
+                                )
+                            ).alias("rank"),
+                        )
+                    )
+                    if (i + 1) % _CHECKPOINT_EVERY == 0 and i + 1 < max_iters:
+                        # Lazy lineage truncation: keeps Catalyst analysis
+                        # cost constant across iterations without running a
+                        # blocking job per checkpoint (eager=False
+                        # materializes at the next action).
+                        ranks = ranks.localCheckpoint(eager=False)
+                        ckpts.append(ranks)
                 # Materialize under the scoped confs; the returned plan is
                 # a checkpointed leaf, immune to the conf restores and to
                 # the helper unpersists below.
@@ -194,7 +325,7 @@ def pagerank(
         # The final eager checkpoint materialized every intermediate lazy
         # lineage-truncation checkpoint as a side effect; those superseded
         # rank tables are garbage now — release them (caching.py) instead
-        # of pinning one per checkpoint_every iterations until session GC.
+        # of pinning one per _CHECKPOINT_EVERY iterations until session GC.
         for c in ckpts:
             release_checkpoint(c)
     return ranks
@@ -275,237 +406,3 @@ def _rank_schema(node_type) -> "T.StructType":
         ]
     )
 
-
-def _pagerank_loop(
-    e: DataFrame,
-    nodes: DataFrame,
-    n_nodes: int,
-    damping: float,
-    max_iters: int,
-    checkpoint_every: int,
-    broadcast_ranks: bool = False,
-) -> tuple[DataFrame, list[DataFrame], list[DataFrame]]:
-    """Runs the iteration; returns (ranks, persisted helpers the caller
-    must unpersist after materializing ranks, intermediate lazy
-    checkpoints the caller must release after materializing ranks — see
-    caching.release_checkpoint).  ``nodes`` is the caller's persisted,
-    node-hash-partitioned distinct node list (counted by the caller —
-    the count feeds the conf gates, see :func:`_loop_conf_gates`).
-
-    ``broadcast_ranks`` hints the per-iteration rank table broadcast in
-    the contribution join (size-gated by the caller): the edge side then
-    never exchanges at all, and the only per-iteration shuffle left is
-    the map-side-combined contribution aggregate.
-
-    Note: a source-nodes-only loop state (sinks' ranks never feed back;
-    full-node update once at the end) was implemented and MEASURED SLOWER
-    on a 5.9M-edge graph at every width (16.6 s vs 12.6 s at 16
-    partitions, 8 iterations) — the saved all-nodes join is cheap against
-    the persisted node list, and the extra plan nodes cost more than the
-    exchange they remove.  Keeping the simpler full-node state."""
-    ckpts: list[DataFrame] = []
-
-    out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    edges_w = (
-        e.join(out_deg, "src")
-        .select("src", "dst", (F.lit(1.0) / F.col("deg")).alias("w"))
-        .repartition("src")
-        .persist()
-    )
-
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    for i in range(max_iters):
-        r_side = ranks.withColumnRenamed("node", "src")
-        if broadcast_ranks:
-            r_side = F.broadcast(r_side)
-        contribs = (
-            edges_w.join(r_side, "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
-        )
-        # Dangling mass via the aggregate identity m = 1 − Σcontrib
-        # (Σcontrib = Σ rank over NON-dangling nodes, since each such node's
-        # rank splits exactly into its out-edge contributions).  This avoids
-        # a second reference to `ranks` (no per-iteration persist needed) and
-        # the left-anti dangling join — one aggregate over the already-
-        # shuffled contribs, kept in the plan as a broadcast 1-row table so
-        # no per-iteration blocking job runs.
-        total = contribs.agg(
-            F.coalesce(F.sum("contrib"), F.lit(0.0)).alias("_tc")
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(total))
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n_nodes)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + (F.lit(1.0) - F.col("_tc")) / n_nodes
-                    )
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < max_iters:
-            # Lazy lineage truncation: keeps Catalyst analysis cost constant
-            # across iterations without running a blocking job per
-            # checkpoint (eager=False materializes at the next action).
-            ranks = ranks.localCheckpoint(eager=False)
-            ckpts.append(ranks)
-    return ranks, [edges_w], ckpts
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    seed_col: str = "node",
-    damping: float = 0.85,
-    max_iters: int = 10,
-    checkpoint_every: int = 2,
-    num_partitions: int | None = None,
-    local_threshold: int = 4_000_000,
-    edges_unique: bool = False,
-) -> DataFrame:
-    """Personalized PageRank: random walk with restart into the SEED set
-    (uniform over seeds) instead of the whole graph — the similarity /
-    recommendation workhorse (\"nodes relevant to THESE nodes\").  Update:
-
-        rank' = (1−d)·r + d·(contrib + m·r),   m = 1 − Σcontrib
-
-    with r = 1/|S| on seeds, 0 elsewhere — dangling mass restarts into
-    the seed distribution, so Σrank = 1 every iteration (same aggregate
-    identity as :func:`pagerank`).
-
-    Same scale shape as the global loop: distinct edges persisted and
-    hash-partitioned once, the restart vector is a narrow seed-flag
-    column on the persisted node list (seed set broadcast into that one
-    join — no per-iteration seed shuffles), one rank exchange + one
-    bins-free aggregate per iteration, lazy lineage-truncation
-    checkpoints every ``checkpoint_every`` iterations.  Below
-    ``local_threshold`` distinct edges the same driver kernel as
-    :func:`pagerank` runs the identical update with the seed restart
-    vector (seed ids intersected with the graph before collecting).
-    """
-    spark = edges.sparkSession
-    d = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
-        F.col("src").isNotNull() & F.col("dst").isNotNull()
-    )
-    # edges_unique: same caller contract as :func:`pagerank` — skip the
-    # distinct exchange when the producer guarantees deduped pairs.
-    e = (d if edges_unique else d.distinct()).persist()
-    # Edge count only (node count is not needed: the restart vector is
-    # seed-based); one job, materializes the cache.
-    n_edges = e.count()
-    if num_partitions is None:
-        default_p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        num_partitions = max(1, min(default_p, n_edges // 500_000 + 1))
-    seed_set = seeds.select(F.col(seed_col).alias("node")).distinct()
-    if local_threshold and 2 * n_edges <= local_threshold:
-        try:
-            # Same driver-kernel gate as :func:`pagerank`; seed ids are
-            # intersected with the (bounded) graph's node set before the
-            # collect, so an oversized seed table cannot blow the driver.
-            seed_ids = [
-                r["node"]
-                for r in seed_set.join(
-                    e.select(F.col("src").alias("node"))
-                    .union(e.select(F.col("dst").alias("node")))
-                    .distinct(),
-                    "node",
-                ).collect()
-            ]
-            return _pagerank_local(e, damping, max_iters, seed_ids=seed_ids)
-        finally:
-            e.unpersist()
-    helpers: list[DataFrame] = [e]
-    ckpts: list[DataFrame] = []
-    try:
-        with scoped_shuffle_partitions(spark, num_partitions):
-            flagged = (
-                e.select(F.col("src").alias("node"))
-                .union(e.select(F.col("dst").alias("node")))
-                .distinct()
-                .join(F.broadcast(seed_set.withColumn("_s", F.lit(True))), "node", "left")
-                .repartition("node")
-                .persist()
-            )
-            helpers.append(flagged)
-            # Restart mass is defined over seeds ∩ graph (an out-of-graph
-            # seed would silently leak Σrank below 1); counting the flag on
-            # the persisted node list costs one tiny cached-side job, and
-            # the total node count (for the loop-conf gates) rides in the
-            # same single aggregate.
-            cnt = flagged.agg(
-                F.count("*").alias("_n"),
-                F.sum(F.col("_s").cast("long")).alias("_ns"),
-            ).first()
-            n_nodes, n_seeds = int(cnt["_n"]), int(cnt["_ns"] or 0)
-            if n_seeds == 0:
-                raise ValueError(
-                    "personalized_pagerank: no seed is a node of the graph"
-                )
-            nodes = flagged.select(
-                "node",
-                F.when(F.col("_s"), F.lit(1.0 / n_seeds))
-                .otherwise(F.lit(0.0))
-                .alias("r"),
-            )
-            out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-            edges_w = (
-                e.join(out_deg, "src")
-                .select("src", "dst", (F.lit(1.0) / F.col("deg")).alias("w"))
-                .repartition("src")
-                .persist()
-            )
-            helpers.append(edges_w)
-            # Same size-gated loop confs as the global loop (see
-            # :func:`_loop_conf_gates`): deterministic broadcast of the
-            # bounded rank table, AQE off only when skew-split provably
-            # cannot fire AND the broadcast hint replaces AQE's only other
-            # in-loop contribution.
-            aqe_off, bcast = _loop_conf_gates(spark, n_edges, n_nodes)
-            with scoped_aqe_disabled(spark, aqe_off):
-                ranks = nodes.select("node", F.col("r").alias("rank"))
-                for i in range(max_iters):
-                    r_side = ranks.withColumnRenamed("node", "src")
-                    if bcast:
-                        r_side = F.broadcast(r_side)
-                    contribs = (
-                        edges_w.join(r_side, "src")
-                        .groupBy(F.col("dst").alias("node"))
-                        .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
-                    )
-                    total = contribs.agg(
-                        F.coalesce(F.sum("contrib"), F.lit(0.0)).alias("_tc")
-                    )
-                    ranks = (
-                        nodes.join(contribs, "node", "left")
-                        .crossJoin(F.broadcast(total))
-                        .select(
-                            "node",
-                            (
-                                F.lit(1.0 - damping) * F.col("r")
-                                + F.lit(damping)
-                                * (
-                                    F.coalesce(F.col("contrib"), F.lit(0.0))
-                                    + (F.lit(1.0) - F.col("_tc")) * F.col("r")
-                                )
-                            ).alias("rank"),
-                        )
-                    )
-                    if (i + 1) % checkpoint_every == 0 and i + 1 < max_iters:
-                        ranks = ranks.localCheckpoint(eager=False)
-                        ckpts.append(ranks)
-                ranks = ranks.localCheckpoint(eager=True)
-    finally:
-        for h in helpers:
-            h.unpersist()
-        # Release the superseded intermediate checkpoints (caching.py) —
-        # all materialized by the final eager checkpoint above.
-        for c in ckpts:
-            release_checkpoint(c)
-    return ranks

@@ -36,22 +36,27 @@ def _sweep(spark) -> None:
 
 def test_pagerank_loop_leaves_at_most_one_checkpoint(spark):
     from compss_python_spark.caching import release_checkpoint
-    from compss_python_spark.graph.pagerank import pagerank
+    from compss_python_spark.graph.pagerank import pagerank, personalized_pagerank
 
     _sweep(spark)
     base = _n_persistent(spark)
     edges = spark.createDataFrame(
         [(i % 53, (i * 7 + 1) % 53) for i in range(400)], "src long, dst long"
     )
+    seeds = spark.createDataFrame([(0,), (7,)], "node long")
     # local_threshold=0 forces the distributed loop (the checkpointing
     # code path under test; the driver kernel persists nothing).
-    ranks = pagerank(edges, max_iters=6, checkpoint_every=2, local_threshold=0)
-    assert ranks.count() == 53
-    # Only the returned eager checkpoint may remain: the per-iteration
-    # lazy checkpoints and the edge/node helper persists must be gone.
-    assert _n_persistent(spark) - base <= 1
-    release_checkpoint(ranks)
-    assert _n_persistent(spark) - base == 0
+    for run in (
+        lambda: pagerank(edges, max_iters=6, local_threshold=0),
+        lambda: personalized_pagerank(edges, seeds, max_iters=6, local_threshold=0),
+    ):
+        ranks = run()
+        assert ranks.count() == 53
+        # Only the returned eager checkpoint may remain: the per-iteration
+        # lazy checkpoints and the edge/node helper persists must be gone.
+        assert _n_persistent(spark) - base <= 1
+        release_checkpoint(ranks)
+        assert _n_persistent(spark) - base == 0
 
 
 def test_kmeans_lloyd_leaves_at_most_one_checkpoint(spark, sf_dir):

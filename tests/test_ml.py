@@ -234,24 +234,30 @@ def test_pagerank_local_matches_distributed(spark):
         assert local[n] == pytest.approx(dist[n], abs=1e-12)
 
 
-def test_pagerank_edges_unique_contract(spark):
-    """edges_unique=True skips the distinct exchange (no Deduplicate in
-    the analyzed plan of the setup) and gives identical ranks on an
-    already-deduped feed, on both the local and the distributed path."""
-    from compss_python_spark.graph.pagerank import pagerank
+def test_pagerank_is_personalized_pagerank_seeded_everywhere(spark):
+    """Global PageRank is personalized PageRank with every node a seed —
+    the identity the single PageRank kernel relies on — on both the
+    driver kernel and the distributed loop."""
+    from compss_python_spark.graph.pagerank import pagerank, personalized_pagerank
 
     edges = spark.createDataFrame(
-        pd.DataFrame({"src": [1, 2, 3, 4, 5], "dst": [2, 3, 1, 1, 2]})
+        pd.DataFrame(
+            {"src": [1, 2, 3, 4, 1, 5, 1], "dst": [2, 3, 1, 1, 3, 2, 6]}
+        )
     )
-    for lt in (4_000_000, 0):  # local kernel, distributed loop
-        base = {r["node"]: r["rank"]
+    all_nodes = edges.select(F.col("src").alias("node")).union(
+        edges.select(F.col("dst").alias("node"))
+    )
+    for lt in (4_000_000, 0):  # driver kernel, distributed loop
+        glob = {r["node"]: r["rank"]
                 for r in pagerank(edges, max_iters=10, local_threshold=lt).collect()}
-        uniq = {r["node"]: r["rank"]
-                for r in pagerank(edges, max_iters=10, local_threshold=lt,
-                                  edges_unique=True).collect()}
-        assert set(base) == set(uniq)
-        for n in base:
-            assert base[n] == pytest.approx(uniq[n], abs=1e-12)
+        pers = {r["node"]: r["rank"]
+                for r in personalized_pagerank(
+                    edges, all_nodes, max_iters=10, local_threshold=lt
+                ).collect()}
+        assert set(glob) == set(pers) == {1, 2, 3, 4, 5, 6}
+        for n in glob:
+            assert glob[n] == pytest.approx(pers[n], abs=1e-12)
 
 
 def test_ks_statistic_matches_reference(spark):
@@ -427,17 +433,21 @@ def test_triangle_count_exact(spark):
 
 def test_pagerank_local_string_nodes(spark):
     """The bounded local path must handle non-integer node ids (URLs,
-    usernames) — regression: np.unique(axis=0) rejects object dtype."""
+    usernames) — regression: np.unique(axis=0) rejects object dtype.  The
+    distributed loop takes them too (its broadcast gate measures the mean
+    key length of string ids)."""
     from compss_python_spark.graph.pagerank import pagerank
 
     edges = spark.createDataFrame(
         pd.DataFrame({"src": ["a", "b", "c"], "dst": ["b", "c", "a"]})
     )
-    ranks = {r["node"]: r["rank"] for r in pagerank(edges, max_iters=15).collect()}
-    assert set(ranks) == {"a", "b", "c"}
-    # symmetric ring -> equal ranks
-    assert max(ranks.values()) - min(ranks.values()) < 1e-9
-    assert sum(ranks.values()) == pytest.approx(1.0, abs=1e-9)
+    for lt in (4_000_000, 0):  # driver kernel, distributed loop
+        ranks = {r["node"]: r["rank"]
+                 for r in pagerank(edges, max_iters=15, local_threshold=lt).collect()}
+        assert set(ranks) == {"a", "b", "c"}
+        # symmetric ring -> equal ranks
+        assert max(ranks.values()) - min(ranks.values()) < 1e-9
+        assert sum(ranks.values()) == pytest.approx(1.0, abs=1e-9)
 
 
 def test_erf_poly_expr_accuracy(spark):
@@ -840,19 +850,51 @@ def test_personalized_pagerank_mass_and_locality(spark):
 
 def test_pagerank_loop_gates_read_the_session_thresholds(spark):
     """Both gates read Spark's typed thresholds: -1 (broadcast disabled)
-    turns both off, and at 10MB they follow the bounded sizes."""
+    turns both off, and at 10MB they follow the bounded sizes, with a rank
+    row sized as 56 B plus the node key's width."""
     from compss_python_spark.graph.pagerank import _loop_conf_gates
 
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
     try:
         spark.conf.set(key, "-1")
-        assert _loop_conf_gates(spark, n_edges=1000, n_nodes=100) == (False, False)
+        assert _loop_conf_gates(spark, n_edges=1000, n_nodes=100, key_bytes=8) == (False, False)
         spark.conf.set(key, "10MB")
-        assert _loop_conf_gates(spark, n_edges=1000, n_nodes=100) == (True, True)
+        assert _loop_conf_gates(spark, n_edges=1000, n_nodes=100, key_bytes=8) == (True, True)
         # ranks above 10MB / 64 B per node: no broadcast, so AQE stays on
-        assert _loop_conf_gates(spark, n_edges=1000, n_nodes=200_000) == (False, False)
+        assert _loop_conf_gates(spark, n_edges=1000, n_nodes=200_000, key_bytes=8) == (False, False)
         # contribution shuffle above the 256MB skew threshold / 32 B per edge
-        assert _loop_conf_gates(spark, n_edges=10_000_000, n_nodes=100) == (False, True)
+        assert _loop_conf_gates(spark, n_edges=10_000_000, n_nodes=100, key_bytes=8) == (False, True)
+        # the same node count broadcasts with 8-byte keys (6.4 MB) but not
+        # with 200-byte string keys (25.6 MB)
+        assert _loop_conf_gates(spark, n_edges=1000, n_nodes=100_000, key_bytes=8) == (True, True)
+        assert _loop_conf_gates(spark, n_edges=1000, n_nodes=100_000, key_bytes=200) == (False, False)
     finally:
         spark.conf.set(key, prev)
+
+
+def test_pagerank_distributed_loop_matches_registry_oracles(spark, sf_dir, monkeypatch):
+    """No registry query reaches the distributed PageRank loop at the
+    gate's scale factors (every graph there fits the driver kernel), so
+    force it with local_threshold=0 — the queries import these functions
+    at call time — and check the three PageRank queries against their
+    DuckDB oracles with the correctness gate's canonical comparison."""
+    import functools
+
+    import __spark_entry__
+    from compss_python_spark.graph import pagerank as pr
+    from tools.check_correctness import canon, duck_connection
+
+    monkeypatch.setattr(pr, "pagerank", functools.partial(pr.pagerank, local_threshold=0))
+    monkeypatch.setattr(
+        pr,
+        "personalized_pagerank",
+        functools.partial(pr.personalized_pagerank, local_threshold=0),
+    )
+    queries, oracles = __spark_entry__.queries(), __spark_entry__.oracle_sql()
+    con = duck_connection(sf_dir)
+    for name in ("graph_pagerank", "graph_pagerank_symmetric", "graph_pagerank_personalized"):
+        got = canon(queries[name](spark, sf_dir).toPandas())
+        want = canon(con.execute(oracles[name]).df())
+        assert len(got) > 0
+        assert got.equals(want), name
