@@ -61,8 +61,36 @@ def query(
     return deco
 
 
+def _files_key(path: str) -> tuple:
+    """``(path, size, st_mtime_ns)`` of every data file Spark reads at
+    ``path``.  Names starting with ``.`` or ``_`` are skipped, as Spark
+    does; a single-file input is keyed by that file."""
+    if not os.path.isdir(path):
+        files = [path]
+    else:
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+            files += [os.path.join(root, n) for n in names if not n.startswith((".", "_"))]
+    key = []
+    for f in sorted(files):
+        st = os.stat(f)
+        key.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(key)
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load a testdata table.
+
+    Inferring a parquet schema starts a footer-reading Spark job; a read
+    with an explicit schema starts none.  So the schema inferred by the
+    first read of a file is remembered, and later reads pass it.  The memo
+    is a dict on the SparkSession object: it lives as long as that session,
+    and after ``spark.stop()`` ``getOrCreate()`` builds a new session with
+    an empty memo.  The key is the path plus ``(path, size, st_mtime_ns)``
+    of every data file under it, so an overwrite or rewrite misses.  Every
+    call still builds a fresh relation with its own attribute ids, so a
+    self-join of two reads stays unambiguous.
 
     events.ts arrives as parquet TIMESTAMP(NANOS) in some fixture
     generations (Spark's vectorized reader rejects it — read as raw nanos
@@ -71,18 +99,25 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     precision) and as TIMESTAMP_NTZ in others.  Both normalize to a
     microsecond TimestampType (session tz pinned UTC, so wall-clock values
     match the DuckDB oracle's naive timestamps): NTZ would reject
-    streaming watermarks and double casts downstream.
+    streaming watermarks and double casts downstream.  The remembered
+    schema is the raw one read under that conf, before normalization.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    memo = vars(spark).setdefault("_parquet_schemas", {})
+    key = (path, _files_key(path))
+    if key in memo:
+        df = spark.read.schema(memo[key]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        memo[key] = df.schema
     if name == "events":
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path)
+    return df

@@ -2,7 +2,6 @@ from compss_python_spark.sources.io import (
     read_parquet,
     read_csv,
     read_json,
-    load_tables,
     write_csv,
     write_json,
     write_parquet,
@@ -12,7 +11,6 @@ __all__ = [
     "read_parquet",
     "read_csv",
     "read_json",
-    "load_tables",
     "write_csv",
     "write_json",
     "write_parquet",

@@ -24,19 +24,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
@@ -70,17 +57,6 @@ def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:
-    """Load the driver testdata star schema as a dict of DataFrames."""
-    return {t: spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")) for t in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
-    """Register the testdata tables as temp views for spark.sql queries."""
-    for name, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by=None) -> None:

@@ -156,10 +156,7 @@ def replay_as_stream(
     _ROCKS = (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
-    try:
-        prev = spark.conf.get(_PROVIDER)
-    except Exception:  # noqa: BLE001 - unset: restore by unset
-        prev = None
+    prev = spark.conf.get(_PROVIDER)
     spark.conf.set(_PROVIDER, _ROCKS)
     try:
         reader = spark.readStream.schema(schema)
@@ -188,10 +185,7 @@ def replay_as_stream(
         finally:
             q.stop()
     finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER)
-        else:
-            spark.conf.set(_PROVIDER, prev)
+        spark.conf.set(_PROVIDER, prev)
     if sink == "parquet":
         return spark.read.schema(out.schema).parquet(sink_dir)
     return spark.table(query_name)

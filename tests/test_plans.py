@@ -503,3 +503,109 @@ def test_aqe_skew_scope_serializes_concurrent_callers(spark):
         t.join()
     assert not overlap, f"scopes overlapped: {overlap}"
     assert spark.conf.get(key) == before
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_table_second_read_starts_no_job(spark, sf_dir):
+    """The first read of a table infers its schema (one footer-reading
+    job); a later read in the same session passes the remembered schema
+    and starts none, yet still builds a fresh relation."""
+    from compss_python_spark.plans.registry import table
+
+    first = table(spark, sf_dir, "nation")
+    before = _next_job_id(spark)
+    second = table(spark, sf_dir, "nation")
+    assert _next_job_id(spark) == before, "memo read started a Spark job"
+    assert second.schema == first.schema
+    # distinct attribute ids: a self-join condition stays unambiguous
+    j = first.join(second, first["n_nationkey"] == second["n_regionkey"])
+    assert j.count() == first.count()
+
+
+def test_table_rewritten_file_is_read_with_its_new_schema(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from compss_python_spark.plans.registry import table
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    assert table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), path)
+    df = table(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y"), (3, "z")]
+    # a Spark-written directory: the overwrite writes new part files
+    out = str(tmp_path / "dir" / "t.parquet")
+    spark.createDataFrame([(1,)], "a long").write.parquet(out)
+    assert table(spark, str(tmp_path / "dir"), "t").columns == ["a"]
+    spark.createDataFrame([(1, "x")], "a long, b string").write.mode("overwrite").parquet(out)
+    assert table(spark, str(tmp_path / "dir"), "t").collect() == [(1, "x")]
+
+
+def test_table_schema_memo_does_not_outlive_its_session(tmp_path):
+    """A file rewritten to the same size and mtime while the session is
+    stopped, with a renamed column, is read with its new schema by the
+    next session: the memo lives on the SparkSession object, and
+    ``getOrCreate()`` after ``stop()`` builds a new one.  Runs in its own
+    interpreter so the suite's session stays up."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    probe = f"""
+import os, sys
+sys.path.insert(0, {str(root)!r})
+import pyarrow as pa, pyarrow.parquet as pq
+from compss_python_spark.plans.registry import table
+from compss_python_spark.session import get_spark
+
+d = {str(tmp_path)!r}
+path = os.path.join(d, "t.parquet")
+pq.write_table(pa.table({{"a": [1, 2, 3]}}), path)
+spark = get_spark("memo-restart", cpus=1)
+assert table(spark, d, "t").columns == ["a"]
+st = os.stat(path)
+spark.stop()
+pq.write_table(pa.table({{"b": [1, 2, 3]}}), path)
+assert os.stat(path).st_size == st.st_size
+os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+spark = get_spark("memo-restart", cpus=1)
+df = table(spark, d, "t")
+print(df.columns, sorted(r[0] for r in df.collect()))
+spark.stop()
+"""
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="512m")
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=root, env=env, capture_output=True, text=True
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().splitlines()[-1] == "['b'] [1, 2, 3]"
+
+
+def test_events_nanos_normalize_identically_on_memo_read(spark, tmp_path):
+    """A TIMESTAMP(NANOS) events.ts gives the same microsecond timestamps
+    on the inferring first read and on the memo read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from compss_python_spark.plans.registry import table
+
+    ns = [1_700_000_000_123_456_789, 1_600_000_000_000_001_999]
+    pq.write_table(
+        pa.table({"id": [1, 2], "ts": pa.array(ns, pa.timestamp("ns"))}),
+        tmp_path / "events.parquet",
+    )
+    reads = []
+    for _ in range(2):
+        df = table(spark, str(tmp_path), "events")
+        assert isinstance(df.schema["ts"].dataType, T.TimestampType)
+        reads.append([r[0] for r in df.orderBy("id").select(F.unix_micros("ts")).collect()])
+    assert reads[0] == reads[1] == [n // 1000 for n in ns]
