@@ -7,7 +7,7 @@ wall-clock (measured in graph/pagerank.py's module docstring).  Spark SQL
 conf is session-global, so the narrowing is visible to any query that runs
 on the same session while a loop is in flight.  The contract here:
 
-- the loop materializes its result (eager localCheckpoint) INSIDE the
+- the loop materializes its final state (an eager checkpoint) INSIDE the
   scope, so the returned DataFrame never depends on the narrowed value;
 - a process-wide lock serializes scopes, so two concurrent loops can never
   interleave set/restore and leave the wrong width behind;

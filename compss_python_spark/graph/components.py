@@ -13,8 +13,8 @@ label (≤ graph diameter iterations).  The same dataflow discipline as
   moves;
 - loop shuffle width derived from the edge count (empty-task scheduling
   dominates small graphs at the session default width);
-- eager localCheckpoint per iteration truncates lineage AND doubles as the
-  convergence action (the changed-label count piggybacks on it);
+- rounds run under :func:`caching.iterate`; the changed-label count is
+  the one convergence action per round;
 - dedup components are candidate-pair graphs: diameter is tiny (near-dup
   clusters are quasi-cliques), so propagation converges in 2–4 rounds; for
   adversarially long path graphs at 100 TB, the large-star/small-star
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from compss_python_spark.caching import release_checkpoint
+from compss_python_spark.caching import iterate
 from compss_python_spark.graph._scoped_conf import scoped_shuffle_partitions
 
 
@@ -56,8 +56,7 @@ def connected_components(
       by 10–100×); the collect is explicitly bounded, like a broadcast.
     - larger → distributed min-label propagation (the 100 TB path): edges
       symmetrized + hash-partitioned once, only the label table moves per
-      iteration, eager localCheckpoint truncates lineage and carries the
-      convergence count.  Scopes ``spark.sql.shuffle.partitions`` to a
+      iteration.  Scopes ``spark.sql.shuffle.partitions`` to a
       size-derived loop width (restored before returning).
 
     Pass ``local_threshold=0`` to force the distributed loop (tests do).
@@ -203,90 +202,56 @@ def _cc_star(c: DataFrame, max_iters: int) -> DataFrame:
     (count, XOR of xxhash64(src,dst)) checksum — XOR is order-insensitive
     and overflow-free (an int64 SUM of hashes trips ANSI overflow), and E
     is distinct so duplicate-cancellation cannot alias two different edge
-    sets beyond ordinary 64-bit collision odds.  The aggregate doubles as
-    the per-iteration materialization action on the eagerly checkpointed
-    edge set (lineage truncation, exactly as the label loop does)."""
-    E = c.localCheckpoint(eager=True)
+    sets beyond ordinary 64-bit collision odds."""
     prev = None
-    for _ in range(max_iters):
-        E_old = E
-        E = _small_star(_large_star(E)).localCheckpoint(eager=True)
-        # E is materialized — the superseded edge checkpoint is garbage
-        # now; release it (caching.py) instead of pinning one edge table
-        # per round until session GC.
-        release_checkpoint(E_old)
+
+    def fixed_point(E: DataFrame) -> bool:
+        nonlocal prev
         cur = tuple(
             E.agg(
                 F.count("*").alias("n"),
                 F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
             ).first()
         )
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"connected_components(algorithm='star') did not reach a fixed "
-            f"point within max_iters={max_iters}; increase max_iters"
-        )
+        stop, prev = cur == prev, cur
+        return stop
+
+    E = iterate(
+        c, lambda E: _small_star(_large_star(E)), max_iters, done=fixed_point
+    )
     # Star forest: every edge is (leaf, root), roots never appear as src —
     # so leaves contribute exactly one row each and roots one via distinct.
-    out = (
+    return (
         E.select(F.col("src").alias("node"), F.col("dst").alias("component"))
         .union(E.select(F.col("dst").alias("node"), F.col("dst").alias("component")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    release_checkpoint(E)  # out is materialized; the star forest is garbage
-    return out
 
 
 def _cc_loop(e: DataFrame, max_iters: int) -> DataFrame:
-    edges_p = e.repartition("src").persist()
-    labels = (
-        edges_p.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("component"))
-        .localCheckpoint(eager=True)
-    )
-    changed = 0
-    for _ in range(max_iters):
+    def propagate(labels: DataFrame) -> DataFrame:
         neighbor_min = (
-            edges_p.join(
-                labels.withColumnRenamed("node", "src"), "src"
-            )
+            edges_p.join(labels.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("component").alias("_nmin"))
         )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("_nmin"), F.col("component"))
-                ).alias("component"),
-                (F.coalesce(F.col("_nmin"), F.col("component")) < F.col("component"))
-                .cast("long")
-                .alias("_changed"),
-            )
-            .localCheckpoint(eager=True)  # materialize + truncate lineage
+        nmin = F.coalesce(F.col("_nmin"), F.col("component"))
+        return labels.join(neighbor_min, "node", "left").select(
+            "node",
+            F.least(F.col("component"), nmin).alias("component"),
+            (nmin < F.col("component")).cast("long").alias("_changed"),
         )
-        changed = new_labels.agg(F.sum("_changed")).first()[0]
-        # new_labels is materialized (its own checkpoint) — the superseded
-        # label checkpoint is garbage NOW; release it instead of pinning
-        # one n-node table per iteration until session GC (caching.py).
-        release_checkpoint(labels)
-        labels = new_labels.drop("_changed")
-        if not changed:
-            break
-    edges_p.unpersist()
-    if changed:
-        # The last iteration still moved labels: some component's diameter
-        # exceeds max_iters and its labels are NOT final.  Returning them
-        # would silently merge/split clusters downstream (dedup survivors).
-        raise RuntimeError(
-            f"connected_components did not converge within max_iters="
-            f"{max_iters} ({changed} labels still changing); increase "
-            "max_iters for long-diameter graphs"
+
+    edges_p = e.repartition("src").persist()
+    try:
+        labels = iterate(
+            edges_p.select(F.col("src").alias("node"))
+            .distinct()
+            .select("node", F.col("node").alias("component")),
+            propagate,
+            max_iters,
+            done=lambda labels: not labels.agg(F.sum("_changed")).first()[0],
         )
-    return labels
+    finally:
+        edges_p.unpersist()
+    return labels.drop("_changed")

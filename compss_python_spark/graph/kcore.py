@@ -2,18 +2,15 @@
 remaining subgraph has minimum degree ≥ k — the standard dense-subgraph /
 spam-cluster / community-seed primitive.
 
-Same dataflow discipline as :mod:`pagerank` / :mod:`components`:
-- edges symmetrized + distinct once (null endpoints excluded by contract,
-  matching components.py);
-- each peel round is ONE degree aggregate + two semi-joins keyed on node
-  ids (high-cardinality, well-distributed) — no driver-side graph state;
-- eager localCheckpoint per round truncates lineage, and the surviving-node
-  count doubles as the convergence action: the active set shrinks
-  monotonically, so an unchanged count IS the fixpoint;
-- rounds needed = peel depth (the degeneracy ordering's layer count), which
-  is small for real graphs (web/social cores peel in a handful of rounds);
-  ``max_iter`` turns a pathological input into a loud error, never a silent
-  wrong answer.
+Edges are symmetrized + distinct once (null endpoints excluded by
+contract, matching components.py) and persisted.  The loop state is the
+current subgraph's degree table; each peel round restricts the edges to
+the nodes of degree ≥ k and recounts degrees — one degree aggregate + two
+semi-joins keyed on node ids (high-cardinality, well-distributed), no
+driver-side graph state.  The subgraph is a k-core once its minimum degree
+is ≥ k.  Rounds needed = peel depth (the degeneracy ordering's layer
+count), small for real graphs; ``max_iter`` turns a pathological input
+into a loud error, never a silent wrong answer.
 """
 
 from __future__ import annotations
@@ -21,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from compss_python_spark.caching import release_checkpoint
+from compss_python_spark.caching import iterate
 
 
 def k_core(
@@ -40,36 +37,27 @@ def k_core(
         .select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .filter(F.col("s") != F.col("d"))
     )
-    cur = (
+    e = (
         base.union(base.select(F.col("d").alias("s"), F.col("s").alias("d")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .persist()
     )
-    prev_nodes = -1
-    prev_active = None
-    for _ in range(max_iter):
-        deg = cur.groupBy("s").agg(F.count("*").alias("degree"))
-        active = deg.filter(F.col("degree") >= k).localCheckpoint(eager=True)
-        # release the superseded checkpoints (caching.py — df.unpersist()
-        # was a no-op on localCheckpoint RDDs, so every peel round leaked
-        # its node and edge tables until session GC)
-        if prev_active is not None:
-            release_checkpoint(prev_active)
-        prev_active = active
-        n = active.count()
-        if n == prev_nodes or n == 0:
-            release_checkpoint(cur)
-            return active.select(F.col("s").alias("node"), "degree")
-        nxt = (
-            cur.join(active.select("s"), "s")
-            .join(active.select(F.col("s").alias("d")), "d")
-            .select("s", "d")
-            .localCheckpoint(eager=True)
+
+    def degrees(sub: DataFrame) -> DataFrame:
+        return sub.groupBy("s").agg(F.count("*").alias("degree"))
+
+    def peel(deg: DataFrame) -> DataFrame:
+        keep = deg.filter(F.col("degree") >= k).select("s")
+        return degrees(
+            e.join(keep, "s").join(keep.select(F.col("s").alias("d")), "d")
         )
-        release_checkpoint(cur)
-        cur = nxt
-        prev_nodes = n
-    raise RuntimeError(
-        f"k_core: did not converge in {max_iter} peel rounds — "
-        "pathological peel depth; raise max_iter explicitly"
-    )
+
+    def is_core(deg: DataFrame) -> bool:
+        low = deg.agg(F.min("degree")).first()[0]
+        return low is None or low >= k
+
+    try:
+        core = iterate(degrees(e), peel, max_iter, done=is_core)
+    finally:
+        e.unpersist()
+    return core.select(F.col("s").alias("node"), "degree")

@@ -1,10 +1,9 @@
 """Synchronous label propagation (community detection) and BFS layers.
 
-Both follow the graph-loop discipline of :mod:`pagerank` / :mod:`kcore`:
-edges symmetrized + distinct once and checkpointed, every round is one
+Edges are symmetrized + distinct once and persisted; every round is one
 join + one map-combined aggregate keyed on node ids (high-cardinality,
-well-distributed — never driver-side graph state), eager localCheckpoint
-truncates lineage per round.
+well-distributed — never driver-side graph state), run by
+:func:`caching.iterate`.
 
 Determinism contracts (what makes these oracle-able):
 - LPA is the SYNCHRONOUS variant (Raghavan et al. 2007) with total
@@ -23,10 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from compss_python_spark.caching import release_checkpoint
+from compss_python_spark.caching import iterate
 
 
 def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct undirected (s, d) pairs, persisted: every round reads them."""
     base = (
         edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
         .select(F.col(src).alias("s"), F.col(dst).alias("d"))
@@ -35,7 +35,7 @@ def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
     return (
         base.union(base.select(F.col("d").alias("s"), F.col("s").alias("d")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .persist()
     )
 
 
@@ -52,32 +52,29 @@ def label_propagation(
     on node id), then ONE aggregate resolves the argmax via
     max(struct(count, -label)) — a map-combinable expression, cheaper and
     skew-safer than a per-node sort window."""
-    e = _symmetrize(edges, src, dst)
-    labels = e.select(F.col("s").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    ).localCheckpoint(eager=True)
-    for _ in range(num_rounds):
+    def relabel(labels: DataFrame) -> DataFrame:
         counts = (
             e.join(labels, e["d"] == labels["node"])
             .groupBy("s", "label")
             .agg(F.count("*").alias("cnt"))
         )
-        nxt = (
+        return (
             counts.groupBy("s")
             .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("_nl"))).alias("_m"))
             .select(
                 F.col("s").alias("node"),
                 (-F.col("_m._nl")).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
-        # df.unpersist() was a NO-OP here: a localCheckpoint pins the RDD,
-        # not the Dataset — release the superseded checkpoint explicitly
-        # (caching.py) or one label table per round stays pinned.
-        release_checkpoint(labels)
-        labels = nxt
-    release_checkpoint(e)  # labels is a checkpointed leaf; edges are garbage
-    return labels
+
+    e = _symmetrize(edges, src, dst)
+    try:
+        init = e.select(F.col("s").alias("node")).distinct()
+        return iterate(
+            init.select("node", F.col("node").alias("label")), relabel, num_rounds
+        )
+    finally:
+        e.unpersist()
 
 
 def bfs_layers(
@@ -95,24 +92,24 @@ def bfs_layers(
 
     Per round: one neighbor-expansion join + one min aggregate, both
     keyed on node ids.  The frontier never materializes on the driver."""
-    e = _symmetrize(edges, src, dst)
-    dist = seeds.select(F.col(seed_col).alias("node")).distinct().select(
-        "node", F.lit(0).cast("int").alias("dist")
-    ).localCheckpoint(eager=True)
-    for _ in range(num_rounds):
+    def relax(dist: DataFrame) -> DataFrame:
         expanded = e.join(dist, e["d"] == dist["node"]).select(
             F.col("s").alias("node"), (F.col("dist") + 1).alias("dist")
         )
-        nxt = (
+        return (
             dist.unionByName(expanded)
             .groupBy("node")
             .agg(F.min("dist").cast("int").alias("dist"))
-            .localCheckpoint(eager=True)
         )
-        release_checkpoint(dist)  # superseded checkpoint (see LPA note)
-        dist = nxt
-    release_checkpoint(e)
-    return dist
+
+    e = _symmetrize(edges, src, dst)
+    try:
+        init = seeds.select(F.col(seed_col).alias("node")).distinct()
+        return iterate(
+            init.select("node", F.lit(0).cast("int").alias("dist")), relax, num_rounds
+        )
+    finally:
+        e.unpersist()
 
 
 def sssp_weighted(
@@ -135,10 +132,9 @@ def sssp_weighted(
     rounds).  Negative weights are rejected (min-plus with a bounded
     round count has no negative-cycle detection).
 
-    Same loop discipline as :func:`bfs_layers`: per round ONE
-    edge-expansion join + ONE map-combined min aggregate, both keyed on
-    node ids; eager localCheckpoint truncates lineage; the frontier never
-    touches the driver.
+    Same loop as :func:`bfs_layers`: per round ONE edge-expansion join +
+    ONE map-combined min aggregate, both keyed on node ids; the frontier
+    never touches the driver.
     """
     base = (
         edges.filter(
@@ -159,37 +155,29 @@ def sssp_weighted(
                 F.col("d").alias("s"), F.col("s").alias("d"), "w"
             )
         )
-    # parallel edges keep only the lightest — the only weight that can
-    # ever win a relaxation
-    e = (
-        base.groupBy("s", "d")
-        .agg(F.min("w").alias("w"))
-        .localCheckpoint(eager=True)
-    )
-    neg = e.filter(F.col("w") < 0).limit(1).count()
-    if neg:
-        raise ValueError(
-            "sssp_weighted: negative edge weights are not supported "
-            "(bounded-round min-plus relaxation cannot detect negative "
-            "cycles)"
-        )
-    dist = (
-        seeds.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .select("node", F.lit(0.0).alias("dist"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(num_rounds):
+    def relax(dist: DataFrame) -> DataFrame:
         expanded = e.join(dist, e["s"] == dist["node"]).select(
             F.col("d").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
         )
-        nxt = (
+        return (
             dist.unionByName(expanded)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
         )
-        release_checkpoint(dist)  # superseded checkpoint (see LPA note)
-        dist = nxt
-    release_checkpoint(e)
-    return dist
+
+    # parallel edges keep only the lightest — the only weight that can
+    # ever win a relaxation
+    e = base.groupBy("s", "d").agg(F.min("w").alias("w")).persist()
+    try:
+        if e.filter(F.col("w") < 0).limit(1).count():
+            raise ValueError(
+                "sssp_weighted: negative edge weights are not supported "
+                "(bounded-round min-plus relaxation cannot detect negative "
+                "cycles)"
+            )
+        init = seeds.select(F.col(seed_col).alias("node")).distinct()
+        return iterate(
+            init.select("node", F.lit(0.0).alias("dist")), relax, num_rounds
+        )
+    finally:
+        e.unpersist()

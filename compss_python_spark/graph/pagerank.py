@@ -15,9 +15,9 @@ than leaking mass.  Spark-first: the same dataflow as DataFrame
 joins/aggs, with scale-critical choices the reference lacks:
 
 - **Plan-growth control**: each iteration extends the logical plan; a LAZY
-  `localCheckpoint` every `_CHECKPOINT_EVERY` iterations truncates lineage
-  so Catalyst/AQE re-planning cost stays constant (SURVEY.md §7 hard part
-  3).  Measured at sf0.1: every 5 → 17 s for 8 iterations, every 2 →
+  checkpoint every `_CHECKPOINT_EVERY` iterations (`caching.iterate`,
+  ``eager=False``) truncates lineage so Catalyst/AQE re-planning cost
+  stays constant (SURVEY.md §7 hard part 3).  Measured at sf0.1: every 5 → 17 s for 8 iterations, every 2 →
   4.6 s — the accumulated-plan AQE re-optimization, not data volume,
   dominates; the 10× sweep in SCALE.md re-confirms 2 as the optimum.
 - **Partitioning reuse**: edges are hash-partitioned once on src and
@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from compss_python_spark.caching import release_checkpoint
+from compss_python_spark.caching import iterate
 from compss_python_spark.graph._scoped_conf import (
     scoped_aqe_disabled,
     scoped_shuffle_partitions,
@@ -215,7 +215,6 @@ def _pagerank(
     node_type = e.schema["src"].dataType
     measure_key = isinstance(node_type, (T.StringType, T.BinaryType))
     helpers: list[DataFrame] = [e]
-    ckpts: list[DataFrame] = []
     try:
         with scoped_shuffle_partitions(spark, n_edges, _EDGES_PER_PARTITION):
             nodes = node_ids
@@ -268,8 +267,7 @@ def _pagerank(
                 # all-nodes join is cheap against the persisted node list,
                 # and the extra plan nodes cost more than the exchange they
                 # remove.  Keeping the simpler full-node state.
-                ranks = nodes.select("node", r.alias("rank"))
-                for i in range(max_iters):
+                def update(ranks: DataFrame) -> DataFrame:
                     r_side = ranks.withColumnRenamed("node", "src")
                     if bcast:
                         # Size-gated: the edge side then never exchanges,
@@ -293,7 +291,7 @@ def _pagerank(
                     total = contribs.agg(
                         F.coalesce(F.sum("contrib"), F.lit(0.0)).alias("_tc")
                     )
-                    ranks = (
+                    return (
                         nodes.join(contribs, "node", "left")
                         .crossJoin(F.broadcast(total))
                         .select(
@@ -308,26 +306,21 @@ def _pagerank(
                             ).alias("rank"),
                         )
                     )
-                    if (i + 1) % _CHECKPOINT_EVERY == 0 and i + 1 < max_iters:
-                        # Lazy lineage truncation: keeps Catalyst analysis
-                        # cost constant across iterations without running a
-                        # blocking job per checkpoint (eager=False
-                        # materializes at the next action).
-                        ranks = ranks.localCheckpoint(eager=False)
-                        ckpts.append(ranks)
-                # Materialize under the scoped confs; the returned plan is
-                # a checkpointed leaf, immune to the conf restores and to
-                # the helper unpersists below.
-                ranks = ranks.localCheckpoint(eager=True)
+
+                # Lazy checkpoints keep Catalyst analysis cost constant
+                # without a blocking job per checkpoint; the final ranks are
+                # materialized under the scoped confs, a checkpointed leaf
+                # immune to the conf restores and the helper unpersists.
+                ranks = iterate(
+                    nodes.select("node", r.alias("rank")),
+                    update,
+                    max_iters,
+                    every=_CHECKPOINT_EVERY,
+                    eager=False,
+                )
     finally:
         for h in helpers:
             h.unpersist()
-        # The final eager checkpoint materialized every intermediate lazy
-        # lineage-truncation checkpoint as a side effect; those superseded
-        # rank tables are garbage now — release them (caching.py) instead
-        # of pinning one per _CHECKPOINT_EVERY iterations until session GC.
-        for c in ckpts:
-            release_checkpoint(c)
     return ranks
 
 

@@ -24,14 +24,14 @@ application) — documented contract, counted nowhere silently.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from compss_python_spark.caching import release_checkpoint
-
+from compss_python_spark.caching import iterate
 from compss_python_spark.llm.text import tokens
 
 END_OF_WORD = "</w>"
+_CHECKPOINT_EVERY = 4
 
 
 def word_frequencies(
@@ -75,7 +75,6 @@ def bpe_train(
     text_col: str = "text",
     num_merges: int = 6,
     lowercase: bool = True,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Train ``num_merges`` BPE merges; returns a DataFrame
     (merge_rank int, lhs, rhs, pair_count long) in training order.
@@ -83,18 +82,12 @@ def bpe_train(
     Each round: adjacent-pair explode over the word-state table (weighted by
     word frequency), one map-combined sum, a deterministic argmax
     (count desc, lhs asc, rhs asc) collected as ONE row, then a literal
-    state replace.  The word table is localCheckpoint-ed every
-    ``checkpoint_every`` rounds so lineage stays O(1) per round.
+    state replace.  The word table is checkpointed every
+    ``_CHECKPOINT_EVERY`` rounds so lineage stays O(1) per round.
     """
-    spark = df.sparkSession
-    wf = word_frequencies(df, text_col, lowercase)
-    state = wf.select(
-        "word", initial_state("word").alias("state"), "freq"
-    ).localCheckpoint(eager=True)
-    last_ckpt = state
-
     merges: list[tuple[int, str, str, int]] = []
-    for r in range(num_merges):
+
+    def merge(state: DataFrame) -> DataFrame | None:
         syms = _symbols()
         pairs = (
             state.select(
@@ -127,10 +120,10 @@ def bpe_train(
             .collect()
         )
         if not best:
-            break
+            return None
         b = best[0]
-        merges.append((r, b["lhs"], b["rhs"], b["pair_count"]))
-        state = state.withColumn(
+        merges.append((len(merges), b["lhs"], b["rhs"], b["pair_count"]))
+        return state.withColumn(
             "state",
             F.replace(
                 F.col("state"),
@@ -138,18 +131,17 @@ def bpe_train(
                 F.lit(f"({b['lhs']}{b['rhs']})"),
             ),
         )
-        if (r + 1) % checkpoint_every == 0:
-            state = state.localCheckpoint(eager=True)
-            # DataFrame.unpersist() was a NO-OP here (a localCheckpoint pins
-            # the RDD, not the Dataset) — release the superseded word-state
-            # checkpoint explicitly (caching.py).
-            release_checkpoint(last_ckpt)
-            last_ckpt = state
 
-    # The merge list lives on the driver; every word-state checkpoint is
-    # garbage once training ends.
-    release_checkpoint(last_ckpt)
-    return spark.createDataFrame(
+    wf = word_frequencies(df, text_col, lowercase)
+    # The merge list lives on the driver; no word state outlives training.
+    iterate(
+        wf.select("word", initial_state("word").alias("state"), "freq"),
+        merge,
+        num_merges,
+        every=_CHECKPOINT_EVERY,
+        keep=False,
+    )
+    return df.sparkSession.createDataFrame(
         merges, "merge_rank int, lhs string, rhs string, pair_count long"
     )
 

@@ -395,44 +395,6 @@ def ivf_topk(
     return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
-def nearest_centroid(
-    df: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign each vector to its nearest (euclidean) centroid — the k-means
-    assignment step as a pure plan expression (centroid list in the plan)."""
-    v = F.col(vec_col).cast("array<double>")
-    best = F.reduce(
-        F.array(
-            *[
-                F.struct(
-                    F.round(
-                        F.sqrt(
-                            F.aggregate(
-                                F.zip_with(v, F.array(*[F.lit(x) for x in c]), lambda a, b: (a - b) * (a - b)),
-                                F.lit(0.0),
-                                lambda acc, x: acc + x,
-                            )
-                        ),
-                        6,
-                    ).alias("dist"),
-                    F.lit(i).alias("cid"),
-                )
-                for i, c in enumerate(centroids)
-            ]
-        ),
-        F.struct(F.lit(float("inf")).alias("dist"), F.lit(-1).alias("cid")),
-        lambda acc, s: F.when(
-            (s["dist"] < acc["dist"]) | ((s["dist"] == acc["dist"]) & (s["cid"] < acc["cid"])), s
-        ).otherwise(acc),
-    )
-    return df.select(
-        F.col(id_col), best["cid"].alias("centroid_id"), best["dist"].alias("dist")
-    )
-
-
 # --- product quantization (IVF-PQ) ----------------------------------------
 
 

@@ -14,10 +14,12 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.ml.classification import LinearSVC, LogisticRegression, NaiveBayes
 from pyspark.ml.functions import array_to_vector
+
+from compss_python_spark.centroids import centroid_literal
 
 
 def _vec(df: DataFrame, features_col: str) -> DataFrame:
@@ -46,6 +48,28 @@ def logistic_regression(train: DataFrame, test: DataFrame, features_col: str = "
     return model.transform(_vec(test, features_col)).drop("_v", "rawPrediction", "probability"), model
 
 
+def _score(w: list[float], b: float) -> Column:
+    """``w·_v + b`` with the driver-held weights folded into the plan as
+    one constant (:mod:`compss_python_spark.centroids`), so the plan does
+    not grow with the iteration count."""
+    wv = F.expr(f"{centroid_literal({0: w})}[0].c")
+    dot = F.aggregate(
+        F.zip_with("_v", wv, lambda a, c: a * c), F.lit(0.0), lambda acc, x: acc + x
+    )
+    return dot + F.lit(b)
+
+
+def _gradient(pts: DataFrame, err: Column, dim: int) -> tuple[list[float], float]:
+    """Full-batch (avg(vⱼ·err) per dim, avg(err)), collected as ONE row;
+    the avg-aggregates combine map-side, so each partition ships dim
+    doubles."""
+    g = pts.select("_v", err.alias("_e")).agg(
+        F.array(*[F.avg(F.element_at("_v", j + 1) * F.col("_e")) for j in range(dim)]),
+        F.avg("_e"),
+    ).first()
+    return list(g[0]), g[1]
+
+
 def logistic_regression_gd(
     train: DataFrame,
     test: DataFrame,
@@ -62,46 +86,31 @@ def logistic_regression_gd(
     fixed iteration count, full-batch gradient), hence exactly
     oracle-checkable, unlike LBFGS.
 
-    The weight vector never touches the driver: it lives as a broadcast
-    1-row DataFrame (array column) carried through the plan; each iteration
-    is one crossJoin + `dim` unrolled avg-aggregates (map-side combine, so
-    the shuffle per iteration is k×dim doubles per map partition).
+    The weight vector is dim doubles held on the driver: each iteration
+    collects one gradient row and applies wⱼ − lr·gⱼ in Python (the same
+    IEEE operations as the SQL oracle).
     """
-    spark = train.sparkSession
     pts = train.select(
         F.col(features_col).cast("array<double>").alias("_v"),
         F.col(label_col).cast("double").alias("_y"),
     )
-    w = spark.createDataFrame(
-        [([0.0] * dim, 0.0)], f"_w array<double>, _b double"
-    )
-    dot = F.aggregate(
-        F.zip_with("_v", "_w", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    )
+    w, b = [0.0] * dim, 0.0
     for _ in range(iters):
-        scored = (
-            pts.crossJoin(F.broadcast(w))
-            .withColumn("_e", F.lit(1.0) / (F.lit(1.0) + F.exp(-(dot + F.col("_b")))) - F.col("_y"))
-        )
-        grad = scored.agg(
-            F.array(*[F.avg(F.element_at("_v", j + 1) * F.col("_e")) for j in range(dim)]).alias("_gw"),
-            F.avg("_e").alias("_gb"),
-        )
-        w = grad.crossJoin(F.broadcast(w)).select(
-            F.zip_with("_w", "_gw", lambda wj, gj: wj - F.lit(lr) * gj).alias("_w"),
-            (F.col("_b") - F.lit(lr) * F.col("_gb")).alias("_b"),
-        )
-    out = (
-        test.select("vec_id", F.col(features_col).cast("array<double>").alias("_v"),
-                    F.col(label_col).cast("int").alias(label_col))
-        .crossJoin(F.broadcast(w))
-        .withColumn(
-            prediction_col,
-            (F.lit(1.0) / (F.lit(1.0) + F.exp(-(dot + F.col("_b")))) >= 0.5).cast("int"),
-        )
-        .select("vec_id", label_col, prediction_col)
+        err = F.lit(1.0) / (F.lit(1.0) + F.exp(-_score(w, b))) - F.col("_y")
+        gw, gb = _gradient(pts, err, dim)
+        w = [wj - lr * gj for wj, gj in zip(w, gw)]
+        b = b - lr * gb
+    return test.select(
+        "vec_id",
+        F.col(features_col).cast("array<double>").alias("_v"),
+        F.col(label_col).cast("int").alias(label_col),
+    ).select(
+        "vec_id",
+        label_col,
+        (F.lit(1.0) / (F.lit(1.0) + F.exp(-_score(w, b))) >= 0.5)
+        .cast("int")
+        .alias(prediction_col),
     )
-    return out
 
 
 def linear_svc_gd(
@@ -130,53 +139,29 @@ def linear_svc_gd(
     a train point's hinge boundary) sits within ulp of the decision
     surface — vanishing on real-valued embeddings.
 
-    Physically one crossJoin + dim unrolled avg-aggregates per iteration
-    (map-side combine: k×dim doubles move per map partition); the weight
-    vector stays a broadcast 1-row DataFrame, never a driver round-trip.
+    Weights on the driver, one gradient row collected per iteration, as
+    in `logistic_regression_gd`.
     """
-    spark = train.sparkSession
     pts = train.select(
         F.col(features_col).cast("array<double>").alias("_v"),
         F.col(label_col).cast("double").alias("_y"),  # ±1
     )
-    w = spark.createDataFrame([([0.0] * dim, 0.0)], "_w array<double>, _b double")
-    dot = F.aggregate(
-        F.zip_with("_v", "_w", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    )
+    w, b = [0.0] * dim, 0.0
     for _ in range(iters):
-        scored = (
-            pts.crossJoin(F.broadcast(w))
-            .withColumn(
-                "_a",
-                F.when((F.col("_y") * (dot + F.col("_b"))) < 1.0, F.col("_y")).otherwise(
-                    F.lit(0.0)
-                ),
-            )
-        )
-        grad = scored.agg(
-            F.array(
-                *[F.avg(F.element_at("_v", j + 1) * F.col("_a")) for j in range(dim)]
-            ).alias("_gw"),
-            F.avg("_a").alias("_ab"),
-        )
-        w = grad.crossJoin(F.broadcast(w)).select(
-            F.zip_with(
-                "_w", "_gw", lambda wj, gj: wj - F.lit(lr) * (F.lit(lam) * wj - gj)
-            ).alias("_w"),
-            (F.col("_b") + F.lit(lr) * F.col("_ab")).alias("_b"),
-        )
-    return (
-        test.select(
-            "vec_id",
-            F.col(features_col).cast("array<double>").alias("_v"),
-            F.col(label_col).cast("double").alias("_yd"),
-        )
-        .crossJoin(F.broadcast(w))
-        .select(
-            "vec_id",
-            (F.col("_yd") > 0).cast("int").alias("y"),
-            ((dot + F.col("_b")) >= 0).cast("int").alias(prediction_col),
-        )
+        hinge = F.when(
+            (F.col("_y") * _score(w, b)) < 1.0, F.col("_y")
+        ).otherwise(F.lit(0.0))
+        gw, ab = _gradient(pts, hinge, dim)
+        w = [wj - lr * (lam * wj - gj) for wj, gj in zip(w, gw)]
+        b = b + lr * ab
+    return test.select(
+        "vec_id",
+        F.col(features_col).cast("array<double>").alias("_v"),
+        F.col(label_col).cast("double").alias("_yd"),
+    ).select(
+        "vec_id",
+        (F.col("_yd") > 0).cast("int").alias("y"),
+        (_score(w, b) >= 0).cast("int").alias(prediction_col),
     )
 
 

@@ -59,6 +59,90 @@ def test_pagerank_loop_leaves_at_most_one_checkpoint(spark):
         assert _n_persistent(spark) - base == 0
 
 
+def _ported_loop(name):
+    """One call of each loop that runs under ``caching.iterate``."""
+    from pyspark.sql import functions as F
+
+    from compss_python_spark.graph.components import connected_components
+    from compss_python_spark.graph.kcore import k_core
+    from compss_python_spark.graph.lpa import bfs_layers, label_propagation, sssp_weighted
+    from compss_python_spark.graph.pagerank import pagerank
+    from compss_python_spark.llm.bpe import bpe_train
+
+    def seeds(e):
+        return e.select(F.col("src").alias("node")).filter("node % 10 = 0")
+
+    return {
+        "cc_label": lambda e: connected_components(e, local_threshold=0),
+        "cc_star": lambda e: connected_components(e, local_threshold=0, algorithm="star"),
+        "label_propagation": lambda e: label_propagation(e, num_rounds=3),
+        "bfs_layers": lambda e: bfs_layers(e, seeds(e), num_rounds=3),
+        "sssp_weighted": lambda e: sssp_weighted(
+            e.withColumn("weight", F.lit(2.0)), seeds(e), num_rounds=3
+        ),
+        "k_core": lambda e: k_core(e, 2),
+        "pagerank": lambda e: pagerank(e, max_iters=5, local_threshold=0),
+        # 5 merges: one checkpoint every 4 rounds plus the initial word table
+        "bpe_train": lambda e: bpe_train(
+            e.selectExpr("concat_ws(' ', 'ab', 'abc', 'b' || src, 'c' || dst) AS text"),
+            num_merges=5,
+        ),
+    }[name]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "cc_label",
+        "cc_star",
+        "label_propagation",
+        "bfs_layers",
+        "sssp_weighted",
+        "k_core",
+        "pagerank",
+        "bpe_train",
+    ],
+)
+def test_ported_loop_leaves_at_most_its_result(spark, name):
+    """A successful loop leaves at most its returned checkpoint, and
+    releasing the result leaves nothing."""
+    from compss_python_spark.caching import release_checkpoint
+
+    _sweep(spark)
+    base = _n_persistent(spark)
+    edges = spark.createDataFrame(
+        [(i % 53, (i * 7 + 1) % 53) for i in range(400)], "src long, dst long"
+    )
+    out = _ported_loop(name)(edges)
+    assert out.count() > 0
+    assert _n_persistent(spark) - base <= 1
+    release_checkpoint(out)
+    assert _n_persistent(spark) - base == 0
+
+
+@pytest.mark.parametrize("name", ["k_core", "cc_label", "cc_star"])
+def test_loop_that_does_not_converge_leaves_nothing(spark, name):
+    """A 30-node path needs 15 peel rounds and 29 label rounds; the budgets
+    below are too small, and the raised loop must release every
+    checkpoint and cache it made."""
+    from compss_python_spark.graph.components import connected_components
+    from compss_python_spark.graph.kcore import k_core
+
+    _sweep(spark)
+    base = _n_persistent(spark)
+    path = spark.createDataFrame([(i, i + 1) for i in range(29)], "src long, dst long")
+    run = {
+        "k_core": lambda: k_core(path, 2, max_iter=3),
+        "cc_label": lambda: connected_components(path, local_threshold=0, max_iters=2),
+        "cc_star": lambda: connected_components(
+            path, local_threshold=0, algorithm="star", max_iters=1
+        ),
+    }[name]
+    with pytest.raises(RuntimeError, match="did not converge"):
+        run()
+    assert _n_persistent(spark) - base == 0
+
+
 def test_kmeans_lloyd_leaves_at_most_one_checkpoint(spark, sf_dir):
     from compss_python_spark.ml.clustering import kmeans_lloyd
     from compss_python_spark.plans import table

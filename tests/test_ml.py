@@ -873,12 +873,32 @@ def test_pagerank_loop_gates_read_the_session_thresholds(spark):
         spark.conf.set(key, prev)
 
 
-def test_pagerank_distributed_loop_matches_registry_oracles(spark, sf_dir, monkeypatch):
-    """No registry query reaches the distributed PageRank loop at the
-    gate's scale factors (every graph there fits the driver kernel), so
-    force it with local_threshold=0 — the queries import these functions
-    at call time — and check the three PageRank queries against their
-    DuckDB oracles with the correctness gate's canonical comparison."""
+# Every query whose kernel runs a fixed-point loop (caching.iterate) or
+# the driver-held GD classifiers.
+_LOOP_QUERIES = (
+    "graph_pagerank",
+    "graph_pagerank_symmetric",
+    "graph_pagerank_personalized",
+    "graph_k_core",
+    "graph_label_propagation",
+    "graph_bfs_layers",
+    "graph_sssp_weighted",
+    "graph_connected_components_star",
+    "text_bpe_train_merges",
+    "text_bpe_subtoken_count",
+    "ml_logreg_gd",
+    "ml_linear_svc_gd",
+)
+
+
+@pytest.mark.parametrize("name", _LOOP_QUERIES)
+def test_iterative_kernel_matches_registry_oracle(spark, sf_dir, monkeypatch, name):
+    """Each iterative kernel's registry query against its DuckDB oracle,
+    with the correctness gate's canonical comparison.  No registry query
+    reaches the distributed PageRank loop at the gate's scale factors
+    (every graph there fits the driver kernel), so force it with
+    local_threshold=0 — the queries import these functions at call time.
+    The other queries run their distributed loops as registered."""
     import functools
 
     import __spark_entry__
@@ -891,10 +911,30 @@ def test_pagerank_distributed_loop_matches_registry_oracles(spark, sf_dir, monke
         "personalized_pagerank",
         functools.partial(pr.personalized_pagerank, local_threshold=0),
     )
-    queries, oracles = __spark_entry__.queries(), __spark_entry__.oracle_sql()
-    con = duck_connection(sf_dir)
-    for name in ("graph_pagerank", "graph_pagerank_symmetric", "graph_pagerank_personalized"):
-        got = canon(queries[name](spark, sf_dir).toPandas())
-        want = canon(con.execute(oracles[name]).df())
-        assert len(got) > 0
-        assert got.equals(want), name
+    got = canon(__spark_entry__.queries()[name](spark, sf_dir).toPandas())
+    want = canon(duck_connection(sf_dir).execute(__spark_entry__.oracle_sql()[name]).df())
+    assert len(got) > 0
+    assert got.equals(want), name
+
+
+@pytest.mark.parametrize("gd", ["logistic_regression_gd", "linear_svc_gd"])
+def test_gd_classifier_plan_does_not_grow_with_iterations(spark, gd):
+    """The weights live on the driver, so the returned plan is the same
+    size whatever the iteration count (it used to double per iteration:
+    each one read the previous weight row twice)."""
+    from compss_python_spark.ml import classification
+
+    rng = np.random.default_rng(5)
+    x = rng.normal(size=(400, 8))
+    y = np.where(x[:, 0] + x[:, 1] >= 0, 1.0, 0.0 if gd == "logistic_regression_gd" else -1.0)
+    df = spark.createDataFrame(
+        [(i, x[i].tolist(), float(y[i])) for i in range(400)],
+        "vec_id long, embedding array<double>, y double",
+    )
+    train, test = df.filter("vec_id % 2 = 0"), df.filter("vec_id % 2 = 1")
+
+    def plan_nodes(iters):
+        out = getattr(classification, gd)(train, test, iters=iters, dim=8)
+        return len(out._jdf.queryExecution().analyzed().treeString().splitlines())
+
+    assert plan_nodes(9) == plan_nodes(3)
