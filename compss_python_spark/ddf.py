@@ -320,8 +320,9 @@ class DDF:
     ) -> "DDF":
         """(node, component) labels of this edge table's undirected graph.
 
-        Raises if propagation needs more than ``max_iters`` rounds (graph
-        diameter bound) rather than returning unconverged labels.
+        Raises if the distributed loop needs more than ``max_iters``
+        rounds rather than returning unconverged labels; its rounds grow
+        with the log of the graph diameter (see graph/components.py).
         """
         from compss_python_spark.graph.components import connected_components
 

@@ -2,24 +2,19 @@
 MinHash-LSH dedup pipeline: candidate pairs → components → one survivor per
 component).
 
-Algorithm: min-label propagation on the symmetrized graph — every node
-starts labeled with its own id; each iteration a node takes the min of its
-own label and its neighbors' labels; converged when an iteration changes no
-label (≤ graph diameter iterations).  The same dataflow discipline as
-:mod:`pagerank`:
+Two physical strategies, chosen by the distinct edge count:
 
-- edges symmetrized + distinct once, hash-partitioned on src, persisted —
-  every iteration's join reuses the layout, only the small label table
-  moves;
-- loop shuffle width derived from the edge count (empty-task scheduling
-  dominates small graphs at the session default width);
-- rounds run under :func:`caching.iterate`; the changed-label count is
-  the one convergence action per round;
-- dedup components are candidate-pair graphs: diameter is tiny (near-dup
-  clusters are quasi-cliques), so propagation converges in 2–4 rounds; for
-  adversarially long path graphs at 100 TB, the large-star/small-star
-  variant (Kiveris et al. 2014) halves diameter per round — noted as the
-  escalation path.
+- a bounded graph is collected and labeled by union-find on the driver;
+- a larger one runs alternating large-star/small-star rounds (Kiveris et
+  al. 2014) under :func:`caching.iterate`, O(log diameter) rounds, each a
+  constant number of groupBy/join shuffles over an edge set that only
+  shrinks toward a star forest rooted at the component minima.  The loop
+  shuffle width is derived from the edge count (empty-task scheduling
+  dominates small graphs at the session default width).
+
+Both produce (node, component = min reachable id).  `CC_STRATEGIES.json`
+holds the measurement that retired min-label propagation (Θ(diameter)
+rounds) in favour of the star loop.
 """
 
 from __future__ import annotations
@@ -38,7 +33,6 @@ def connected_components(
     dst: str = "dst",
     max_iters: int = 20,
     local_threshold: int = 4_000_000,
-    algorithm: str = "label",
 ) -> DataFrame:
     """Returns (node, component) where component = min node id reachable.
 
@@ -48,33 +42,21 @@ def connected_components(
     - ``2·distinct canonical edges ≤ local_threshold`` → union-find on the
       driver over the collected (src, dst) pairs and re-parallelize the
       labels.  The gate reads the same count that materializes the
-      distinct-edge cache the distributed loop needs anyway, so deciding
+      distinct-edge cache the distributed loop starts from, so deciding
       it costs no extra pass over the edge SOURCE (pair tables are often
       joins — re-executing them once per gate dominated the wall at 10×).
       A candidate-pair graph that fits in a few MB gains nothing from a
-      multi-job label-propagation loop (per-iteration scheduling dominates
-      by 10–100×); the collect is explicitly bounded, like a broadcast.
-    - larger → distributed min-label propagation (the 100 TB path): edges
-      symmetrized + hash-partitioned once, only the label table moves per
-      iteration.  Scopes ``spark.sql.shuffle.partitions`` to a
-      size-derived loop width (restored before returning).
+      multi-job loop (per-iteration scheduling dominates by 10–100×); the
+      collect is explicitly bounded, like a broadcast.
+    - larger → alternating large-star/small-star rounds, O(log diameter)
+      of them.  Scopes ``spark.sql.shuffle.partitions`` to a size-derived
+      loop width (restored before returning).
 
     Pass ``local_threshold=0`` to force the distributed loop (tests do).
-    Raises ``RuntimeError`` if propagation has not converged after
-    ``max_iters`` iterations (labels would be silently wrong for any
-    component whose diameter exceeds the budget) — raise ``max_iters`` for
-    long-path graphs; near-dup candidate graphs converge in 2–4 rounds.
-
-    ``algorithm`` selects the distributed strategy (the local union-find
-    path is identical for both): ``"label"`` = min-label propagation
-    (Θ(diameter) rounds — right for near-dup candidate graphs, which are
-    quasi-cliques), ``"star"`` = alternating large-star/small-star
-    (Kiveris et al. 2014, O(log diameter) rounds — the escalation path for
-    long-diameter graphs at 100 TB, where Θ(diameter) shuffles would never
-    finish).  Both produce component = min reachable id.
+    Raises ``RuntimeError`` if the star rounds have not reached their
+    fixed point after ``max_iters`` rounds (labels would be silently wrong)
+    — the rounds grow with log diameter (a 256-node path converges within 12).
     """
-    if algorithm not in ("label", "star"):
-        raise ValueError(f"algorithm must be 'label' or 'star', got {algorithm!r}")
     spark = edges.sparkSession
     # Null endpoints are excluded by contract on BOTH paths (same contract
     # as pagerank): a null src/dst is not a node, and letting one through
@@ -86,8 +68,7 @@ def connected_components(
     ).filter(F.col("src") != F.col("dst"))
     # Canonicalize (least, greatest) BEFORE distinct: one scan of the raw
     # pairs instead of the union-then-distinct two, and the distinct
-    # exchange carries half the rows of a symmetrized dedup.  The full
-    # symmetric edge set is then c ∪ flip(c) — cheap, c is post-dedup.
+    # exchange carries half the rows of a symmetrized dedup.
     # The regime gate reads the SAME count that materializes this cache —
     # the previous raw-count gate re-executed the whole edge SOURCE (a
     # multi-million-row join for LSH pair tables) once more purely to
@@ -108,16 +89,11 @@ def connected_components(
             return _cc_local(c)
         finally:
             c.unpersist()
-    e = c.union(c.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     try:
         with scoped_shuffle_partitions(spark, n_edges, 2_000_000):
-            if algorithm == "star":
-                labels = _cc_star(c, max_iters)
-            else:
-                labels = _cc_loop(e, max_iters)
+            return _cc_star(c, max_iters)
     finally:
         c.unpersist()
-    return labels
 
 
 def _cc_local(e: DataFrame) -> DataFrame:
@@ -194,9 +170,8 @@ def _cc_star(c: DataFrame, max_iters: int) -> DataFrame:
     """Alternating large-star/small-star (Kiveris et al. 2014, "Connected
     Components in MapReduce and Beyond") — O(log diameter) rounds, each a
     constant number of groupBy/join shuffles over the CURRENT edge set
-    (which only shrinks toward the star forest).  The escalation path for
-    long-diameter graphs where min-label propagation's Θ(diameter) rounds
-    are unaffordable; same output contract as :func:`_cc_loop`.
+    (which only shrinks toward the star forest); same output contract as
+    :func:`_cc_local`.
 
     Convergence = the edge set reaches a fixed point, detected by a
     (count, XOR of xxhash64(src,dst)) checksum — XOR is order-insensitive
@@ -226,32 +201,3 @@ def _cc_star(c: DataFrame, max_iters: int) -> DataFrame:
         .union(E.select(F.col("dst").alias("node"), F.col("dst").alias("component")))
         .distinct()
     )
-
-
-def _cc_loop(e: DataFrame, max_iters: int) -> DataFrame:
-    def propagate(labels: DataFrame) -> DataFrame:
-        neighbor_min = (
-            edges_p.join(labels.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("component").alias("_nmin"))
-        )
-        nmin = F.coalesce(F.col("_nmin"), F.col("component"))
-        return labels.join(neighbor_min, "node", "left").select(
-            "node",
-            F.least(F.col("component"), nmin).alias("component"),
-            (nmin < F.col("component")).cast("long").alias("_changed"),
-        )
-
-    edges_p = e.repartition("src").persist()
-    try:
-        labels = iterate(
-            edges_p.select(F.col("src").alias("node"))
-            .distinct()
-            .select("node", F.col("node").alias("component")),
-            propagate,
-            max_iters,
-            done=lambda labels: not labels.agg(F.sum("_changed")).first()[0],
-        )
-    finally:
-        edges_p.unpersist()
-    return labels.drop("_changed")

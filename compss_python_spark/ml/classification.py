@@ -88,18 +88,23 @@ def logistic_regression_gd(
 
     The weight vector is dim doubles held on the driver: each iteration
     collects one gradient row and applies wⱼ − lr·gⱼ in Python (the same
-    IEEE operations as the SQL oracle).
+    IEEE operations as the SQL oracle).  The cast training points are
+    cached for the fit, so the source is scanned once, not once per
+    iteration.
     """
     pts = train.select(
         F.col(features_col).cast("array<double>").alias("_v"),
         F.col(label_col).cast("double").alias("_y"),
-    )
+    ).persist()
     w, b = [0.0] * dim, 0.0
-    for _ in range(iters):
-        err = F.lit(1.0) / (F.lit(1.0) + F.exp(-_score(w, b))) - F.col("_y")
-        gw, gb = _gradient(pts, err, dim)
-        w = [wj - lr * gj for wj, gj in zip(w, gw)]
-        b = b - lr * gb
+    try:
+        for _ in range(iters):
+            err = F.lit(1.0) / (F.lit(1.0) + F.exp(-_score(w, b))) - F.col("_y")
+            gw, gb = _gradient(pts, err, dim)
+            w = [wj - lr * gj for wj, gj in zip(w, gw)]
+            b = b - lr * gb
+    finally:
+        pts.unpersist()
     return test.select(
         "vec_id",
         F.col(features_col).cast("array<double>").alias("_v"),
@@ -139,21 +144,25 @@ def linear_svc_gd(
     a train point's hinge boundary) sits within ulp of the decision
     surface — vanishing on real-valued embeddings.
 
-    Weights on the driver, one gradient row collected per iteration, as
-    in `logistic_regression_gd`.
+    Weights on the driver, one gradient row collected per iteration, and
+    the cast training points cached for the fit, as in
+    `logistic_regression_gd`.
     """
     pts = train.select(
         F.col(features_col).cast("array<double>").alias("_v"),
         F.col(label_col).cast("double").alias("_y"),  # ±1
-    )
+    ).persist()
     w, b = [0.0] * dim, 0.0
-    for _ in range(iters):
-        hinge = F.when(
-            (F.col("_y") * _score(w, b)) < 1.0, F.col("_y")
-        ).otherwise(F.lit(0.0))
-        gw, ab = _gradient(pts, hinge, dim)
-        w = [wj - lr * (lam * wj - gj) for wj, gj in zip(w, gw)]
-        b = b + lr * ab
+    try:
+        for _ in range(iters):
+            hinge = F.when(
+                (F.col("_y") * _score(w, b)) < 1.0, F.col("_y")
+            ).otherwise(F.lit(0.0))
+            gw, ab = _gradient(pts, hinge, dim)
+            w = [wj - lr * (lam * wj - gj) for wj, gj in zip(w, gw)]
+            b = b + lr * ab
+    finally:
+        pts.unpersist()
     return test.select(
         "vec_id",
         F.col(features_col).cast("array<double>").alias("_v"),

@@ -557,10 +557,11 @@ def graph_pagerank(spark, sf_dir):
     """,
 )
 def graph_connected_components(spark, sf_dir):
-    """Connected components (min-label propagation) on the sparse
-    customer–supplier co-purchase graph (l_quantity = 50 keeps ~2% of
-    edges so the graph fragments into many components).  Exact parity with
-    a DuckDB recursive-CTE transitive closure taking MIN(reachable id)."""
+    """Connected components on the sparse customer–supplier co-purchase
+    graph (l_quantity = 50 keeps ~2% of edges so the graph fragments into
+    many components); at the registry's scale factors it fits the driver
+    union-find.  Exact parity with a DuckDB recursive-CTE transitive
+    closure taking MIN(reachable id)."""
     from compss_python_spark.graph.components import connected_components
 
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") == 50)
@@ -568,7 +569,7 @@ def graph_connected_components(spark, sf_dir):
     edges = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
         (F.col("o_custkey") * 2).alias("src"),
         (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    )  # no pre-distinct: union-find/label-propagation dedup internally
+    )  # no pre-distinct: connected_components dedups internally
     return connected_components(edges)
 
 
@@ -592,10 +593,9 @@ def graph_connected_components(spark, sf_dir):
 )
 def graph_connected_components_star(spark, sf_dir):
     """Same graph + oracle as `graph_connected_components`, forced through
-    the alternating large-star/small-star strategy (Kiveris et al. 2014 —
-    the O(log diameter) escalation path for long-diameter graphs at scale;
-    local_threshold=0 bypasses the union-find gate so the distributed star
-    rounds actually run)."""
+    the distributed large-star/small-star loop (Kiveris et al. 2014,
+    O(log diameter) rounds): local_threshold=0 bypasses the union-find
+    gate, so this is the registry's coverage of the loop."""
     from compss_python_spark.graph.components import connected_components
 
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") == 50)
@@ -604,7 +604,7 @@ def graph_connected_components_star(spark, sf_dir):
         (F.col("o_custkey") * 2).alias("src"),
         (F.col("l_suppkey") * 2 + 1).alias("dst"),
     )
-    return connected_components(edges, local_threshold=0, algorithm="star")
+    return connected_components(edges, local_threshold=0)
 
 
 @query(

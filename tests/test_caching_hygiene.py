@@ -73,8 +73,7 @@ def _ported_loop(name):
         return e.select(F.col("src").alias("node")).filter("node % 10 = 0")
 
     return {
-        "cc_label": lambda e: connected_components(e, local_threshold=0),
-        "cc_star": lambda e: connected_components(e, local_threshold=0, algorithm="star"),
+        "cc_star": lambda e: connected_components(e, local_threshold=0),
         "label_propagation": lambda e: label_propagation(e, num_rounds=3),
         "bfs_layers": lambda e: bfs_layers(e, seeds(e), num_rounds=3),
         "sssp_weighted": lambda e: sssp_weighted(
@@ -93,7 +92,6 @@ def _ported_loop(name):
 @pytest.mark.parametrize(
     "name",
     [
-        "cc_label",
         "cc_star",
         "label_propagation",
         "bfs_layers",
@@ -120,11 +118,11 @@ def test_ported_loop_leaves_at_most_its_result(spark, name):
     assert _n_persistent(spark) - base == 0
 
 
-@pytest.mark.parametrize("name", ["k_core", "cc_label", "cc_star"])
+@pytest.mark.parametrize("name", ["k_core", "cc_star"])
 def test_loop_that_does_not_converge_leaves_nothing(spark, name):
-    """A 30-node path needs 15 peel rounds and 29 label rounds; the budgets
-    below are too small, and the raised loop must release every
-    checkpoint and cache it made."""
+    """A 30-node path needs 15 peel rounds and more than one star round;
+    the budgets below are too small, and the raised loop must release
+    every checkpoint and cache it made."""
     from compss_python_spark.graph.components import connected_components
     from compss_python_spark.graph.kcore import k_core
 
@@ -133,10 +131,7 @@ def test_loop_that_does_not_converge_leaves_nothing(spark, name):
     path = spark.createDataFrame([(i, i + 1) for i in range(29)], "src long, dst long")
     run = {
         "k_core": lambda: k_core(path, 2, max_iter=3),
-        "cc_label": lambda: connected_components(path, local_threshold=0, max_iters=2),
-        "cc_star": lambda: connected_components(
-            path, local_threshold=0, algorithm="star", max_iters=1
-        ),
+        "cc_star": lambda: connected_components(path, local_threshold=0, max_iters=1),
     }[name]
     with pytest.raises(RuntimeError, match="did not converge"):
         run()
@@ -168,15 +163,15 @@ def test_lsh_cc_pipeline_leaves_at_most_one_checkpoint(spark, sf_dir):
     base = _n_persistent(spark)
     docs = table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(docs, threshold=0.5, collapse_exact=True)
-    # local_threshold=0 forces the distributed label-propagation loop.
+    # local_threshold=0 forces the distributed large-star/small-star loop.
     comp = connected_components(
         pairs, src="id_a", dst="id_b", local_threshold=0
     )
     comp.count()
     # The widened scan is a cache, dropped by clearCache.  The pair
     # table's collapse barrier is released once the eager pair result
-    # exists and the CC loop releases each superseded label table, so only
-    # the pair result and the final labels may remain.
+    # exists and the CC loop releases each superseded edge set, so only
+    # the pair result and the final star forest may remain.
     spark.catalog.clearCache()
     assert _n_persistent(spark) - base <= 2
     release_checkpoint(comp)

@@ -874,7 +874,9 @@ def test_pagerank_loop_gates_read_the_session_thresholds(spark):
 
 
 # Every query whose kernel runs a fixed-point loop (caching.iterate) or
-# the driver-held GD classifiers.
+# the driver-held GD classifiers; the connected-components queries cover
+# the candidate-pair graphs of the dedup pipelines, string keys included
+# (er_supplier_entities links s_name values).
 _LOOP_QUERIES = (
     "graph_pagerank",
     "graph_pagerank_symmetric",
@@ -883,7 +885,11 @@ _LOOP_QUERIES = (
     "graph_label_propagation",
     "graph_bfs_layers",
     "graph_sssp_weighted",
+    "graph_connected_components",
     "graph_connected_components_star",
+    "dedup_lsh_cc_survivors_md5",
+    "dedup_survivors_best_quality",
+    "er_supplier_entities",
     "text_bpe_train_merges",
     "text_bpe_subtoken_count",
     "ml_logreg_gd",
@@ -894,14 +900,15 @@ _LOOP_QUERIES = (
 @pytest.mark.parametrize("name", _LOOP_QUERIES)
 def test_iterative_kernel_matches_registry_oracle(spark, sf_dir, monkeypatch, name):
     """Each iterative kernel's registry query against its DuckDB oracle,
-    with the correctness gate's canonical comparison.  No registry query
-    reaches the distributed PageRank loop at the gate's scale factors
-    (every graph there fits the driver kernel), so force it with
-    local_threshold=0 — the queries import these functions at call time.
-    The other queries run their distributed loops as registered."""
+    with the correctness gate's canonical comparison.  Every PageRank and
+    connected-components graph at the gate's scale factors fits the driver
+    kernel, so force the distributed loops with local_threshold=0 — the
+    queries import these functions at call time.  The other queries run
+    their distributed loops as registered."""
     import functools
 
     import __spark_entry__
+    from compss_python_spark.graph import components
     from compss_python_spark.graph import pagerank as pr
     from tools.check_correctness import canon, duck_connection
 
@@ -910,6 +917,11 @@ def test_iterative_kernel_matches_registry_oracle(spark, sf_dir, monkeypatch, na
         pr,
         "personalized_pagerank",
         functools.partial(pr.personalized_pagerank, local_threshold=0),
+    )
+    monkeypatch.setattr(
+        components,
+        "connected_components",
+        functools.partial(components.connected_components, local_threshold=0),
     )
     got = canon(__spark_entry__.queries()[name](spark, sf_dir).toPandas())
     want = canon(duck_connection(sf_dir).execute(__spark_entry__.oracle_sql()[name]).df())
@@ -938,3 +950,34 @@ def test_gd_classifier_plan_does_not_grow_with_iterations(spark, gd):
         return len(out._jdf.queryExecution().analyzed().treeString().splitlines())
 
     assert plan_nodes(9) == plan_nodes(3)
+
+
+@pytest.mark.parametrize("gd", ["logistic_regression_gd", "linear_svc_gd"])
+def test_gd_classifier_reads_its_training_table_once(spark, gd):
+    """The cast training points are cached for the fit: a counting UDF on
+    the label column runs once per training row over 5 iterations (it ran
+    once per row per iteration when every gradient re-read the source),
+    and the fit leaves no persisted RDD behind."""
+    from compss_python_spark.ml import classification
+
+    rows = spark.sparkContext.accumulator(0)
+
+    @F.udf("double")
+    def counted(y):
+        rows.add(1)
+        return y
+
+    rng = np.random.default_rng(7)
+    x = rng.normal(size=(60, 4))
+    y = np.where(x[:, 0] >= 0, 1.0, 0.0 if gd == "logistic_regression_gd" else -1.0)
+    df = spark.createDataFrame(
+        [(i, x[i].tolist(), float(y[i])) for i in range(60)],
+        "vec_id long, embedding array<double>, y double",
+    )
+    train = df.filter("vec_id % 2 = 0").withColumn("y", counted("y"))
+    test = df.filter("vec_id % 2 = 1")
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = persistent().size()
+    getattr(classification, gd)(train, test, iters=5, dim=4)
+    assert rows.value == 30
+    assert persistent().size() - before == 0

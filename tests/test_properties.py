@@ -191,8 +191,9 @@ EDGE_LISTS = st.lists(
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_connected_components_local_equals_distributed(spark, edges):
-    """Driver union-find fast path == distributed label propagation on
-    arbitrary small graphs (self-loops, duplicates, isolated pairs)."""
+    """Driver union-find fast path == distributed large-star/small-star
+    loop on arbitrary small graphs (self-loops, duplicates, isolated
+    pairs)."""
     from compss_python_spark.graph.components import connected_components
 
     df = spark.createDataFrame(edges, "src long, dst long")
@@ -203,44 +204,22 @@ def test_connected_components_local_equals_distributed(spark, edges):
     assert local == dist
 
 
-@given(edges=EDGE_LISTS)
-@settings(max_examples=6, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_connected_components_star_equals_local(spark, edges):
-    """Alternating large-star/small-star == driver union-find on arbitrary
-    small graphs (self-loops, duplicates, isolated pairs)."""
-    from compss_python_spark.graph.components import connected_components
-
-    df = spark.createDataFrame(edges, "src long, dst long")
-    local = {r["node"]: r["component"]
-             for r in connected_components(df).collect()}
-    star = {r["node"]: r["component"]
-            for r in connected_components(
-                df, local_threshold=0, algorithm="star").collect()}
-    assert star == local
-
-
 def test_connected_components_star_log_diameter_path(spark):
-    """A 256-node path graph: min-label propagation needs Θ(diameter)=255
-    rounds (raises under a 12-round budget), large-star/small-star halves
-    the diameter per round and must converge within the same budget with
-    the exact union-find labels."""
-    import pytest
-
+    """A 256-node path graph: the distributed loop halves the diameter per
+    round, so the default call converges within a 12-round budget (min-label
+    propagation needed Θ(diameter) = 255) with the exact union-find
+    labels."""
     from compss_python_spark.graph.components import connected_components
 
     n = 256
     df = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
     expect = {r["node"]: r["component"] for r in connected_components(df).collect()}
     assert expect == {i: 0 for i in range(n)}
-    star = {
+    dist = {
         r["node"]: r["component"]
-        for r in connected_components(
-            df, local_threshold=0, algorithm="star", max_iters=12).collect()
+        for r in connected_components(df, local_threshold=0, max_iters=12).collect()
     }
-    assert star == expect
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, local_threshold=0, max_iters=12).collect()
+    assert dist == expect
 
 
 @given(
