@@ -204,6 +204,24 @@ def test_connected_components_local_equals_distributed(spark, edges):
     assert local == dist
 
 
+@given(edges=EDGE_LISTS)
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_connected_components_star_equals_local(spark, edges):
+    """Large-star/small-star on the reversed edge list == driver union-find
+    on the original: the loop treats edges as undirected, whichever
+    endpoint comes first."""
+    from compss_python_spark.graph.components import connected_components
+
+    df = spark.createDataFrame(edges, "src long, dst long")
+    rev = spark.createDataFrame([(d, s) for s, d in edges], "src long, dst long")
+    local = {r["node"]: r["component"]
+             for r in connected_components(df).collect()}
+    star = {r["node"]: r["component"]
+            for r in connected_components(rev, local_threshold=0).collect()}
+    assert star == local
+
+
 def test_connected_components_star_log_diameter_path(spark):
     """A 256-node path graph: the distributed loop halves the diameter per
     round, so the default call converges within a 12-round budget (min-label
