@@ -17,6 +17,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from compss_python_spark.caching import release_checkpoint
+from compss_python_spark.operators.etl import _rows_before
+
 
 def correlation(df: DataFrame, col1: str, col2: str) -> float:
     """Pearson correlation [ref: ddf_library/functions/statistics/correlation.py]."""
@@ -326,47 +329,37 @@ def welch_t_test(
 
 
 def _ks_d_statistic(df: DataFrame, col: str, cdf_of) -> tuple[float, int]:
-    """Distributed KS D statistic: max deviation between the ECDF of ``col``
-    and the theoretical CDF produced by ``cdf_of(value_column)``.
+    """Distributed KS D statistic: max deviation between the ECDF of the
+    non-null values of ``col`` and the theoretical CDF produced by
+    ``cdf_of(value_column)``.
 
-    Distributed ECDF without a single-partition sort: range-partition by
-    value, rank *within* each partition, then add per-partition offsets
-    (one tiny collect of partition counts — the classic zipWithIndex
-    decomposition).  D = max(|F(x) - (i-1)/n|, |i/n - F(x)|).
+    ECDF positions come from the distributed prefix sum
+    :func:`~compss_python_spark.operators.etl._rows_before`, not a
+    single-partition sort; i = rows before + 1 and
+    D = max(|F(x) - (i-1)/n|, |i/n - F(x)|).  Tied values take arbitrary
+    consecutive positions, and the max over them is the same whatever the
+    order.  The ranking is consumed here, so its checkpoint is released
+    before returning.  Raises ``ValueError`` when no non-null value is left.
     """
-    spark = df.sparkSession
-    nparts = max(df.rdd.getNumPartitions(), 1)
-    # localCheckpoint pins the sampled range boundaries immutably (a lost
-    # persist()ed partition would be recomputed with re-sampled boundaries,
-    # silently desynchronizing pid offsets from the data the rank job reads).
-    vals = (
-        df.select(F.col(col).alias("v"))
-        .repartitionByRange(nparts, "v")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    counts = {r["pid"]: r["c"] for r in vals.groupBy("pid").agg(F.count("*").alias("c")).collect()}
-    n = sum(counts.values())
-    offs, acc = [], 0
-    for pid in sorted(counts):
-        offs.append((pid, acc))
-        acc += counts[pid]
-    off_df = spark.createDataFrame(offs, "pid int, off long")
-
-    w = Window.partitionBy("pid").orderBy("v")
-    d_row = (
-        vals.withColumn("j", F.row_number().over(w))
-        .join(F.broadcast(off_df), "pid")
-        .select((F.col("j") + F.col("off")).alias("i"), cdf_of(F.col("v")).alias("cdf"))
-        .select(
-            F.greatest(
-                F.abs(F.col("cdf") - (F.col("i") - 1) / F.lit(n)),
-                F.abs(F.col("i") / F.lit(n) - F.col("cdf")),
-            ).alias("d")
+    vals = df.select(F.col(col).alias("v")).filter(F.col("v").isNotNull())
+    ranked, n = _rows_before(vals, ["v"])
+    try:
+        if n == 0:
+            raise ValueError(f"ks test: no non-null rows in {col!r}")
+        i = F.col("_before") + 1
+        d_row = (
+            ranked.select(i.alias("i"), cdf_of(F.col("v")).alias("cdf"))
+            .select(
+                F.greatest(
+                    F.abs(F.col("cdf") - (F.col("i") - 1) / F.lit(n)),
+                    F.abs(F.col("i") / F.lit(n) - F.col("cdf")),
+                ).alias("d")
+            )
+            .agg(F.max("d").alias("d"))
+            .first()
         )
-        .agg(F.max("d").alias("d"))
-        .first()
-    )
+    finally:
+        release_checkpoint(ranked)
     return d_row["d"], n
 
 
@@ -451,60 +444,25 @@ def _kolmogorov_sf(t: float, terms: int = 100) -> float:
 
 
 def global_avg_ranks(
-    df: DataFrame, col: str, output_col: str = "rank_avg", num_range_parts: int = 32
+    df: DataFrame, col: str, output_col: str = "rank_avg"
 ) -> DataFrame:
     """Average (midrank / tie-corrected) global ranks of ``col`` — the
     primitive under Spearman correlation and rank-sum tests.  Null values
     are excluded.
 
     Scale-correct global ranking WITHOUT a single-partition window: ONE
-    groupBy(value) collapses the data to its distinct values; the distinct
-    table is range-repartitioned so partition i holds values strictly below
-    partition i+1, each partition computes a LOCAL cumulative count, and the
-    per-partition totals (≤ num_range_parts rows — the only driver
-    materialization) come back as a literal offset map.  rank_avg(v) =
-    rows_below(v) + (ties(v)+1)/2 then joins back on value (AQE broadcasts
-    the distinct table when small).  This is the classic distributed
-    prefix-sum; a global Window.orderBy would collapse 100 TB onto one task.
+    groupBy(value) collapses the data to its distinct values, and the
+    distributed prefix sum
+    :func:`~compss_python_spark.operators.etl._rows_before` weighted by
+    each value's count gives rows_below(v).  rank_avg(v) = rows_below(v) +
+    (ties(v)+1)/2 then joins back on value (AQE broadcasts the distinct
+    table when small).  The result reads the kernel's pinned checkpoint.
     """
     data = df.filter(F.col(col).isNotNull())
     counts = data.groupBy(col).agg(F.count("*").alias("_cnt"))
-    # localCheckpoint(eager=True) pins the range boundaries IMMUTABLY:
-    # repartitionByRange re-samples per job, and a merely persist()ed
-    # partition lost to eviction/executor failure would be recomputed with
-    # freshly re-sampled boundaries — silently breaking the offset map the
-    # final join reads.  Checkpointed partitions have no lineage to replay,
-    # so the partitioning the offsets describe is the one every downstream
-    # job reads (and there is no cached table left to unpersist).
-    c = (
-        counts.repartitionByRange(num_range_parts, F.col(col))
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    wp = (
-        Window.partitionBy("_pid")
-        .orderBy(col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    c = c.withColumn("_local_less", F.coalesce(F.sum("_cnt").over(wp), F.lit(0)))
-    totals = sorted(
-        (r["_pid"], r["_t"])
-        for r in c.groupBy("_pid").agg(F.sum("_cnt").alias("_t")).collect()
-    )
-    offsets, acc = {}, 0
-    for pid, t in totals:
-        offsets[pid] = acc
-        acc += t
-    omap = F.create_map(
-        *[F.lit(x) for pid, off in offsets.items() for x in (pid, off)]
-    )
+    c, _ = _rows_before(counts, [F.col(col)], weight="_cnt")
     ranked = c.select(
-        col,
-        (
-            F.element_at(omap, F.col("_pid"))
-            + F.col("_local_less")
-            + (F.col("_cnt") + 1) / 2.0
-        ).alias(output_col),
+        col, (F.col("_before") + (F.col("_cnt") + 1) / 2.0).alias(output_col)
     )
     return data.join(ranked, col)
 

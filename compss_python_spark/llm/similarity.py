@@ -283,31 +283,16 @@ def lsh_multiprobe_topk(
     return _rerank_candidates(cand, k)
 
 
-def _train_quantizer_sample(
-    corpus: DataFrame,
-    vec_col: str,
-    n_cells: int,
-    seed: int,
-    train_sample: int = 65536,
-    iters: int = 25,
-) -> list[list[float]]:
-    """Seeded numpy Lloyd on a bounded RANDOM corpus sample — the
-    FAISS-style coarse-quantizer training path (quantizer quality needs
-    coverage, not the full corpus; the collect is explicitly bounded like
-    a broadcast).  rand-keyed TakeOrdered gives an unbiased sample without
-    a pre-count (a head `limit` would train on whatever region of the
-    space the first partitions hold); distances use the matmul expansion
-    (sample × cells result, never the sample × cells × dim temporary)."""
+def _lloyd(X, k: int, rng, iters: int) -> list[list[float]]:
+    """Seeded numpy Lloyd: ``min(k, len(X))`` centres drawn from the rows
+    of ``X`` by ``rng``, then up to ``iters`` rounds of nearest-centre
+    assignment and mean update.  Distances use the matmul expansion
+    (rows × centres result, never the rows × centres × dim temporary); an
+    empty cluster keeps its centre; the loop stops once no centre moves
+    beyond ``np.allclose``."""
     import numpy as np
 
-    pdf = (
-        corpus.select(vec_col).orderBy(F.rand(seed)).limit(train_sample).toPandas()
-    )
-    X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-    if len(X) == 0:
-        return []
-    rng = np.random.default_rng(seed)
-    k = min(n_cells, len(X))
+    k = min(k, len(X))
     centers = X[rng.choice(len(X), size=k, replace=False)]
     x2 = (X**2).sum(axis=1)[:, None]
     for _ in range(iters):
@@ -322,9 +307,34 @@ def _train_quantizer_sample(
         if np.allclose(new, centers):
             break
         centers = new
+    return [c.tolist() for c in centers]
+
+
+def _train_quantizer_sample(
+    corpus: DataFrame,
+    vec_col: str,
+    n_cells: int,
+    seed: int,
+    train_sample: int = 65536,
+    iters: int = 25,
+) -> list[list[float]]:
+    """Seeded numpy Lloyd on a bounded RANDOM corpus sample — the
+    FAISS-style coarse-quantizer training path (quantizer quality needs
+    coverage, not the full corpus; the collect is explicitly bounded like
+    a broadcast).  rand-keyed TakeOrdered gives an unbiased sample without
+    a pre-count (a head `limit` would train on whatever region of the
+    space the first partitions hold); :func:`_lloyd` does the training."""
+    import numpy as np
+
+    pdf = (
+        corpus.select(vec_col).orderBy(F.rand(seed)).limit(train_sample).toPandas()
+    )
+    X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+    if len(X) == 0:
+        return []
     # k < n_cells (tiny corpus): return the k real cells — padding with
     # duplicate centroids would make queries probe guaranteed-empty cells.
-    return [c.tolist() for c in centers]
+    return _lloyd(X, n_cells, np.random.default_rng(seed), iters)
 
 
 def ivf_topk(
@@ -443,24 +453,10 @@ def train_pq_codebooks_sample(
         raise ValueError(f"pq: dim {dim} not divisible by m_sub {m_sub}")
     dsub = dim // m_sub
     rng = np.random.default_rng(seed)
-    books = []
-    for m in range(m_sub):
-        S = X[:, m * dsub : (m + 1) * dsub]
-        k = min(ksub, len(S))
-        centers = S[rng.choice(len(S), size=k, replace=False)]
-        s2 = (S**2).sum(axis=1)[:, None]
-        for _ in range(iters):
-            d2 = s2 - 2.0 * (S @ centers.T) + (centers**2).sum(axis=1)[None, :]
-            assign = d2.argmin(axis=1)
-            new = np.array([
-                S[assign == j].mean(axis=0) if (assign == j).any() else centers[j]
-                for j in range(k)
-            ])
-            if np.allclose(new, centers):
-                break
-            centers = new
-        books.append([c.tolist() for c in centers])
-    return books
+    return [
+        _lloyd(X[:, m * dsub : (m + 1) * dsub], ksub, rng, iters)
+        for m in range(m_sub)
+    ]
 
 
 def ivfpq_topk(
@@ -477,7 +473,6 @@ def ivfpq_topk(
     centroids: list[list[float]] | None = None,
     codebooks: list[list[list[float]]] | None = None,
     refine_factor: int = 1,
-    encode_impl: str = "numpy",
 ) -> DataFrame:
     """IVF-PQ approximate top-k (the FAISS IVFPQ shape, non-residual):
     coarse IVF cells bound the scan to ``nprobe/n_cells`` of the corpus;
@@ -491,11 +486,10 @@ def ivfpq_topk(
     partition-local.  The relational skeleton (cell equi-join, window
     top-k) is DataFrame throughout; the per-row encode — the one genuinely
     flop-dense step (n_cells·dim + m_sub·ksub·dsub per vector) — runs as
-    Arrow-batched numpy by default (``encode_impl='numpy'``), with a pure
-    JVM-expression twin (``'expr'``) that produces BIT-IDENTICAL codes,
-    probes and ADC sums (both accumulate dimensions strictly left-to-right,
-    ties to the lowest cell id), property-tested equal.  The ADC gather
-    itself stays a JVM zip_with — no Python on the candidate stream.
+    Arrow-batched numpy, accumulating dimensions strictly left-to-right
+    with ties to the lowest cell id, so codes, probes and ADC sums match
+    the SQL oracle exactly.  The ADC gather itself stays a JVM zip_with —
+    no Python on the candidate stream.
 
     Returns (query_id, neighbor_id, adc_d2, cosine, rn): ADC ranking
     (``rn`` by adc asc, id tie-break) plus the exact cosine computed only
@@ -522,7 +516,6 @@ def ivfpq_topk(
     if codebooks is None:
         codebooks = train_pq_codebooks_sample(corpus, vec_col, m_sub, ksub, seed)
 
-    spark = corpus.sparkSession
     c0 = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("_cv")
     )
@@ -531,148 +524,78 @@ def ivfpq_topk(
     )
     id_type = dict(c0.dtypes)["neighbor_id"]
 
-    if encode_impl == "numpy":
-        # Arrow-batched encode: the per-row flop count (n_cells·dim +
-        # m_sub·ksub·dsub) makes interpreted higher-order expressions the
-        # bottleneck; numpy does it as batched column ops.  Accumulation is
-        # SEQUENTIAL over dimensions (a Python loop of vectorized adds, the
-        # same left-to-right order as the expression path's `aggregate` and
-        # DuckDB's list_sum), and argmin/argsort-stable tie-break to the
-        # lowest cell id — so codes, probes and ADC sums stay bit-identical
-        # across all three implementations.
-        import numpy as np
-        import pandas as pd
+    # Arrow-batched encode: the per-row flop count (n_cells·dim +
+    # m_sub·ksub·dsub) makes interpreted higher-order expressions the
+    # bottleneck; numpy does it as batched column ops.  Accumulation is
+    # SEQUENTIAL over dimensions (a Python loop of vectorized adds, the
+    # same left-to-right order as DuckDB's list_sum), and
+    # argmin/argsort-stable tie-break to the lowest cell id — so codes,
+    # probes and ADC sums match the SQL oracle bit for bit.
+    import numpy as np
+    import pandas as pd
 
-        C = np.array([list(map(float, r)) for r in centroids], dtype=np.float64)
-        B = np.array(
-            [[list(map(float, w)) for w in book] for book in codebooks],
-            dtype=np.float64,
-        )
+    C = np.array([list(map(float, r)) for r in centroids], dtype=np.float64)
+    B = np.array(
+        [[list(map(float, w)) for w in book] for book in codebooks],
+        dtype=np.float64,
+    )
 
-        def _cell_d2(X: "np.ndarray") -> "np.ndarray":
-            d2 = np.zeros((len(X), len(C)))
-            for i in range(dim):
-                t = X[:, i : i + 1] - C[None, :, i]
-                d2 += t * t
-            return d2
+    def _cell_d2(X: "np.ndarray") -> "np.ndarray":
+        d2 = np.zeros((len(X), len(C)))
+        for i in range(dim):
+            t = X[:, i : i + 1] - C[None, :, i]
+            d2 += t * t
+        return d2
 
-        def _sub_d2(X: "np.ndarray", m: int) -> "np.ndarray":
-            d2 = np.zeros((len(X), B.shape[1]))
-            for i in range(dsub):
-                t = X[:, m * dsub + i : m * dsub + i + 1] - B[m, None, :, i]
-                d2 += t * t
-            return d2
+    def _sub_d2(X: "np.ndarray", m: int) -> "np.ndarray":
+        d2 = np.zeros((len(X), B.shape[1]))
+        for i in range(dsub):
+            t = X[:, m * dsub + i : m * dsub + i + 1] - B[m, None, :, i]
+            d2 += t * t
+        return d2
 
-        def enc_corpus(it):
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf["_cv"].tolist(), dtype=np.float64)
-                codes = np.stack(
-                    [_sub_d2(X, m).argmin(axis=1) for m in range(m_sub)], axis=1
-                )
-                yield pd.DataFrame(
-                    {
-                        "neighbor_id": pdf["neighbor_id"],
-                        "_cv": pdf["_cv"],
-                        "cell": _cell_d2(X).argmin(axis=1).astype("int32"),
-                        "_code": [r.astype(int).tolist() for r in codes],
-                    }
-                )
-
-        def enc_query(it):
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf["_qv"].tolist(), dtype=np.float64)
-                probes = np.argsort(_cell_d2(X), axis=1, kind="stable")[:, :nprobe]
-                tabs = np.stack([_sub_d2(X, m) for m in range(m_sub)], axis=1)
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"],
-                        "_qv": pdf["_qv"],
-                        "_tab": [t.tolist() for t in tabs],
-                        "_probe": [p.astype(int).tolist() for p in probes],
-                    }
-                )
-
-        c = c0.mapInPandas(
-            enc_corpus,
-            f"neighbor_id {id_type}, _cv array<double>, cell int, _code array<int>",
-        )
-        q = q0.mapInPandas(
-            enc_query,
-            f"query_id {id_type}, _qv array<double>, _tab array<array<double>>, "
-            "_probe array<int>",
-        ).select("query_id", "_qv", "_tab", F.explode("_probe").alias("cell"))
-    elif encode_impl == "expr":
-        cents_df = spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "cell int, cvec array<double>",
-        ).agg(F.array_sort(F.collect_list(F.struct("cell", "cvec"))).alias("_cents"))
-        cbs_df = (
-            spark.createDataFrame(
-                [
-                    (m, c, [float(x) for x in w])
-                    for m, book in enumerate(codebooks)
-                    for c, w in enumerate(book)
-                ],
-                "m int, cell int, cvec array<double>",
+    def enc_corpus(it):
+        for pdf in it:
+            if not len(pdf):
+                continue
+            X = np.array(pdf["_cv"].tolist(), dtype=np.float64)
+            codes = np.stack(
+                [_sub_d2(X, m).argmin(axis=1) for m in range(m_sub)], axis=1
             )
-            .groupBy("m")
-            .agg(F.array_sort(F.collect_list(F.struct("cell", "cvec"))).alias("cells"))
-            .agg(F.array_sort(F.collect_list(F.struct("m", "cells"))).alias("_cbs"))
-        )
-        model_row = F.broadcast(cents_df.crossJoin(cbs_df))
-
-        def cell_dists(v: Column) -> Column:
-            return F.transform(
-                F.col("_cents"),
-                lambda s: F.struct(_d2_expr(v, s.cvec).alias("d2"), s.cell.alias("cell")),
+            yield pd.DataFrame(
+                {
+                    "neighbor_id": pdf["neighbor_id"],
+                    "_cv": pdf["_cv"],
+                    "cell": _cell_d2(X).argmin(axis=1).astype("int32"),
+                    "_code": [r.astype(int).tolist() for r in codes],
+                }
             )
 
-        def subv(v: Column, m: Column) -> Column:
-            return F.slice(v, m * dsub + 1, dsub)
-
-        def pq_code(v: Column) -> Column:
-            return F.transform(
-                F.col("_cbs"),
-                lambda mb: F.array_min(
-                    F.transform(
-                        mb.cells,
-                        lambda s: F.struct(
-                            _d2_expr(subv(v, mb.m), s.cvec).alias("d2"),
-                            s.cell.alias("cell"),
-                        ),
-                    )
-                ).cell,
+    def enc_query(it):
+        for pdf in it:
+            if not len(pdf):
+                continue
+            X = np.array(pdf["_qv"].tolist(), dtype=np.float64)
+            probes = np.argsort(_cell_d2(X), axis=1, kind="stable")[:, :nprobe]
+            tabs = np.stack([_sub_d2(X, m) for m in range(m_sub)], axis=1)
+            yield pd.DataFrame(
+                {
+                    "query_id": pdf["query_id"],
+                    "_qv": pdf["_qv"],
+                    "_tab": [t.tolist() for t in tabs],
+                    "_probe": [p.astype(int).tolist() for p in probes],
+                }
             )
 
-        def adc_table(v: Column) -> Column:
-            return F.transform(
-                F.col("_cbs"),
-                lambda mb: F.transform(mb.cells, lambda s: _d2_expr(subv(v, mb.m), s.cvec)),
-            )
-
-        c = c0.crossJoin(model_row).select(
-            "neighbor_id",
-            "_cv",
-            F.array_min(cell_dists(F.col("_cv"))).cell.alias("cell"),
-            pq_code(F.col("_cv")).alias("_code"),
-        )
-        q = q0.crossJoin(model_row).select(
-            "query_id",
-            "_qv",
-            adc_table(F.col("_qv")).alias("_tab"),
-            F.explode(
-                F.transform(
-                    F.slice(F.array_sort(cell_dists(F.col("_qv"))), 1, nprobe),
-                    lambda s: s.cell,
-                )
-            ).alias("cell"),
-        )
-    else:
-        raise ValueError(f"ivfpq_topk: unknown encode_impl {encode_impl!r}")
+    c = c0.mapInPandas(
+        enc_corpus,
+        f"neighbor_id {id_type}, _cv array<double>, cell int, _code array<int>",
+    )
+    q = q0.mapInPandas(
+        enc_query,
+        f"query_id {id_type}, _qv array<double>, _tab array<array<double>>, "
+        "_probe array<int>",
+    ).select("query_id", "_qv", "_tab", F.explode("_probe").alias("cell"))
     scored = (
         c.join(q, "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))

@@ -75,8 +75,9 @@ def roc_auc(df: DataFrame, label_col: str = "label",
     trapezoidal ROC integral.  Returns 1 row (auc, n_pos, n_neg).
 
     Scale shape: ranking rides :func:`~compss_python_spark.functions.
-    statistics.global_avg_ranks` — a range-partitioned distributed
-    prefix-sum, NEVER a single-partition ORDER BY window — so the AUC of
+    statistics.global_avg_ranks`, i.e. the distributed prefix-rank kernel
+    :func:`~compss_python_spark.operators.etl._rows_before`, NEVER a
+    single-partition ORDER BY window — so the AUC of
     10¹¹ scored rows is two vocab-sized aggregates plus one range shuffle
     of the distinct scores.  (MLlib's BinaryClassificationMetrics sorts
     globally for the same quantity.)

@@ -21,6 +21,8 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from compss_python_spark.operators.etl import _rows_before
+
 _SIMPLE_FUNCS = {
     "count": F.count,
     "sum": F.sum,
@@ -217,58 +219,28 @@ def ntile_distributed(
     order_cols: list[str],
     buckets: int,
     output_col: str,
-    num_range_parts: int = 32,
 ):
     """Exact SQL NTILE semantics WITHOUT a single-partition window.
 
     ``order_cols`` must form a total order (include a unique tiebreak).
-    Ordinal ranks come from the same distributed prefix-sum that powers
-    functions.statistics.global_avg_ranks: range-repartition on the order
-    key (boundaries pinned by eager localCheckpoint), per-partition local
-    row counts, and a ≤ num_range_parts-row offset collect.  The bucket is
-    then NTILE's exact remainder rule — the first (n mod b) buckets get
-    ceil(n/b) rows — computed as an expression from (rank, n).  A global
-    Window.orderBy would collapse 100 TB onto one task; this shape keeps
-    every stage spread.
+    Ordinal ranks come from the distributed prefix sum
+    :func:`~compss_python_spark.operators.etl._rows_before` (range
+    partitions pinned by one eager localCheckpoint, local prefix counts,
+    per-partition offsets).  The bucket is then NTILE's exact remainder
+    rule — the first (n mod b) buckets get ceil(n/b) rows — computed as an
+    expression from (rank, n).  A global Window.orderBy would collapse
+    100 TB onto one task; this shape keeps every stage spread.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    order = [F.col(c).asc() for c in order_cols]
-    c = (
-        df.repartitionByRange(num_range_parts, *order)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    wp = (
-        Window.partitionBy("_pid")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    c = c.withColumn("_local_less", F.coalesce(F.count(F.lit(1)).over(wp), F.lit(0)))
-    totals = sorted(
-        (r["_pid"], r["_t"])
-        for r in c.groupBy("_pid").agg(F.count("*").alias("_t")).collect()
-    )
-    offsets, acc = {}, 0
-    for pid, t in totals:
-        offsets[pid] = acc
-        acc += t
-    n, b = acc, buckets
-    omap = F.create_map(
-        *[F.lit(x) for pid, off in offsets.items() for x in (pid, off)]
-    )
-    r0 = F.element_at(omap, F.col("_pid")) + F.col("_local_less")  # rank - 1
-    q, rem = divmod(n, b)
+    ranked, n = _rows_before(df, [F.col(c).asc() for c in order_cols])
+    r0 = F.col("_before")  # rank - 1
+    q, rem = divmod(n, buckets)
     big = F.lit(rem * (q + 1))
     bucket = (
         F.when(r0 < big, F.floor(r0 / F.lit(q + 1)))
         .otherwise(F.lit(rem) + F.floor((r0 - big) / F.lit(max(q, 1))))
         + 1
     )
-    return c.withColumn(output_col, bucket.cast("int")).drop(
-        "_pid", "_local_less"
-    )
+    return ranked.withColumn(output_col, bucket.cast("int")).drop("_before")
 
 
 def rfm_segmentation(

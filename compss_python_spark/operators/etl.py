@@ -15,6 +15,7 @@ so reference-style strings keep working.
 
 from __future__ import annotations
 
+import json
 import re
 from typing import Iterable, Mapping, Sequence
 
@@ -218,43 +219,65 @@ def clean_missing_fill_stat(df: DataFrame, subset: Sequence[str], strategy: str 
 # parts": solved by contract, not engine magic).
 
 
+def _rows_before(
+    df: DataFrame, order: Sequence, weight: str | None = None
+) -> tuple[DataFrame, int]:
+    """Distributed prefix sum under ``order``: adds ``_before``, the sum of
+    ``weight`` (1 per row by default) over the rows strictly before each
+    row, and returns it with the total over all rows.
+
+    The one global-rank kernel (row index, NTILE, KS ECDF, midranks): a
+    global ``Window.orderBy`` would serialize the input onto one task.
+    Instead, range-partition on ``order`` at the session's shuffle width
+    (AQE may coalesce adjacent ranges), take a prefix inside each
+    partition, and add the totals of the partitions before it (one collect
+    of at most one row per partition).  The offsets enter the plan as one
+    JSON ``array<bigint>`` constant indexed by partition id: one py4j call
+    at any partition count, and no join.
+
+    The eager ``localCheckpoint`` pins the range boundaries:
+    ``repartitionByRange`` re-samples them in every job, and a ``persist()``
+    block lost to eviction would be recomputed with new boundaries,
+    desynchronizing the offsets from the rows they describe.  The
+    checkpoint is the leaf of the returned frame; a caller that consumes
+    the frame itself frees it with ``caching.release_checkpoint``.
+
+    Rows that tie on ``order`` share a partition and are numbered in an
+    arbitrary order among themselves, so ``order`` must be total or the
+    caller must treat ties alike.
+    """
+    w = F.lit(1) if weight is None else F.col(weight)
+    c = (
+        df.repartitionByRange(*order)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
+    totals = dict(c.groupBy("_pid").agg(F.sum(w)).collect())
+    offsets, total = [], 0
+    for pid in range(max(totals, default=-1) + 1):
+        offsets.append(total)
+        total += totals.get(pid, 0)
+    wp = (
+        Window.partitionBy("_pid")
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    before = F.expr(
+        f"element_at(from_json('{json.dumps(offsets)}', 'array<bigint>'), _pid + 1)"
+    ) + F.coalesce(F.sum(w).over(wp), F.lit(0))
+    return c.withColumn("_before", before).drop("_pid"), total
+
+
 def with_row_index(df: DataFrame, order_by: Sequence[str], name: str = "_idx") -> DataFrame:
     """Stable 0-based global row index under an explicit (total) ordering.
 
-    ``zipWithIndex``-equivalent two-phase numbering — range-partition by the
-    key, rank locally, add per-partition offsets (one tiny collect of
-    partition counts) — instead of a global ``row_number`` window, which
-    would serialize the whole input onto one partition.
-
-    The range-partitioned frame is persisted so the counting pass and the
-    numbering pass see identical partition contents; the cache is dropped
-    lazily by Spark's LRU (callers doing one-shot positional ops never
-    rebuild it).
+    ``zipWithIndex``-equivalent numbering through :func:`_rows_before`
+    (range-partition, local prefix, per-partition offsets) instead of a
+    global ``row_number`` window, which would serialize the whole input
+    onto one partition.  The result reads the kernel's pinned checkpoint.
     """
-    spark = df.sparkSession
-    nparts = max(df.rdd.getNumPartitions(), 1)
-    keys = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    parted = (
-        df.repartitionByRange(nparts, *keys)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    counts = {
-        r["_pid"]: r["c"]
-        for r in parted.groupBy("_pid").agg(F.count("*").alias("c")).collect()
-    }
-    offs, acc = [], 0
-    for pid in sorted(counts):
-        offs.append((pid, acc))
-        acc += counts[pid]
-    off_df = spark.createDataFrame(offs or [(0, 0)], "_pid int, _off long")
-    w = Window.partitionBy("_pid").orderBy(*keys)
-    return (
-        parted.withColumn("_j", F.row_number().over(w))
-        .join(F.broadcast(off_df), "_pid")
-        .withColumn(name, F.col("_j") + F.col("_off") - 1)
-        .drop("_pid", "_j", "_off")
-    )
+    ranked, _ = _rows_before(df, order_by)
+    return ranked.withColumnRenamed("_before", name)
 
 
 def add_column(

@@ -180,6 +180,19 @@ def test_lsh_cc_pipeline_leaves_at_most_one_checkpoint(spark, sf_dir):
     assert _n_persistent(spark) == 0
 
 
+@pytest.mark.parametrize("ks", ["ks_one_sample_uniform", "ks_one_sample_normal"])
+def test_ks_test_releases_its_ranking(spark, ks):
+    """The KS test consumes its prefix-rank checkpoint on the driver, so it
+    must leave no persistent RDD behind."""
+    from compss_python_spark.functions import statistics
+
+    _sweep(spark)
+    df = spark.createDataFrame([((i * 37 % 50) / 50.0,) for i in range(50)], "v double")
+    base = _n_persistent(spark)
+    getattr(statistics, ks)(df, "v")
+    assert _n_persistent(spark) - base == 0
+
+
 def test_widened_scan_survives_a_full_sweep(spark):
     """The width guard's widened scan is shared by its consumers and
     keeps its lineage: neither releasing one consumer's checkpoints, nor

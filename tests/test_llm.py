@@ -705,37 +705,6 @@ def test_pq_codebooks_md5_shape_and_guard(spark):
         S.pq_codebooks_md5(64, 7, 16)
 
 
-def test_ivfpq_numpy_equals_expr_paths(spark):
-    """The Arrow/numpy encode and the JVM-expression encode are
-    bit-identical (codes, probes, ADC sums, ranking) — both accumulate
-    dimensions strictly left-to-right with ties to the lowest cell."""
-    import numpy as np
-    import pandas as pd
-
-    from compss_python_spark.llm import similarity as S
-
-    rng = np.random.default_rng(17)
-    X = rng.normal(0, 1.0, (150, 32))
-    emb = spark.createDataFrame(pd.DataFrame(
-        {"vec_id": range(150), "embedding": [r.tolist() for r in X]}
-    ))
-    q = emb.filter("vec_id < 8")
-    cents = S.md5_planes(32, 4, table_id=5)
-    books = S.pq_codebooks_md5(32, 4, 8, base_table_id=200)
-    outs = []
-    for impl in ("numpy", "expr"):
-        df = S.ivfpq_topk(emb, q, k=4, n_cells=4, nprobe=2, m_sub=4, ksub=8,
-                          centroids=cents, codebooks=books, encode_impl=impl)
-        outs.append(sorted(
-            (r["query_id"], r["neighbor_id"], r["adc_d2"], r["rn"])
-            for r in df.collect()
-        ))
-    assert outs[0] == outs[1] and len(outs[0]) > 0
-    with pytest.raises(ValueError, match="unknown encode_impl"):
-        S.ivfpq_topk(emb, q, centroids=cents, codebooks=books,
-                     encode_impl="nope").collect()
-
-
 def test_set_similarity_join_equals_brute_force(spark):
     """Prefix filtering loses no recall: output == python brute force over
     token sets, at two thresholds."""

@@ -450,6 +450,33 @@ def test_pagerank_local_string_nodes(spark):
         assert sum(ranks.values()) == pytest.approx(1.0, abs=1e-9)
 
 
+@pytest.mark.parametrize("ks", ["ks_one_sample_uniform", "ks_one_sample_normal"])
+def test_ks_test_ignores_null_values(spark, ks):
+    """Null values are no observations: they neither count in n nor move
+    any ECDF position, so D and p are those of the non-null values."""
+    from compss_python_spark.functions import statistics
+
+    vals = [0.05, 0.2, 0.35, 0.5, 0.9, 0.95]
+    without = spark.createDataFrame([(v,) for v in vals], "v double")
+    with_nulls = spark.createDataFrame(
+        [(v,) for v in vals[:3] + [None] + vals[3:] + [None]], "v double"
+    )
+    d, p = getattr(statistics, ks)(without, "v")
+    d_n, p_n = getattr(statistics, ks)(with_nulls, "v")
+    assert d_n == pytest.approx(d, abs=1e-12)
+    assert p_n == pytest.approx(p, abs=1e-12)
+
+
+@pytest.mark.parametrize("vals", [[], [None, None]], ids=["empty", "all_null"])
+@pytest.mark.parametrize("ks", ["ks_one_sample_uniform", "ks_one_sample_normal"])
+def test_ks_test_without_values_raises(spark, ks, vals):
+    from compss_python_spark.functions import statistics
+
+    df = spark.createDataFrame([(v,) for v in vals], "v double")
+    with pytest.raises(ValueError, match="no non-null rows"):
+        getattr(statistics, ks)(df, "v")
+
+
 def test_erf_poly_expr_accuracy(spark):
     """The JVM polynomial erf (A&S 7.1.26) stays within its documented
     1.5e-7 bound of math.erf across the useful range, and the poly-erf KS
@@ -895,16 +922,32 @@ _LOOP_QUERIES = (
     "ml_logreg_gd",
     "ml_linear_svc_gd",
 )
+# Every query over the distributed prefix-rank kernel
+# (operators.etl._rows_before: row index, NTILE, KS ECDF, midranks), and
+# the IVF-PQ numpy encode.
+_RANK_QUERIES = (
+    "add_column_positional",
+    "sort_with_rank",
+    "rfm_segmentation",
+    "llm_quality_buckets",
+    "ml_calibration_bins",
+    "ks_test_uniform",
+    "ks_test_normal_poly",
+    "stats_spearman",
+    "stats_mann_whitney",
+    "ml_roc_auc",
+    "similarity_topk_ivfpq_md5",
+)
 
 
-@pytest.mark.parametrize("name", _LOOP_QUERIES)
+@pytest.mark.parametrize("name", _LOOP_QUERIES + _RANK_QUERIES)
 def test_iterative_kernel_matches_registry_oracle(spark, sf_dir, monkeypatch, name):
-    """Each iterative kernel's registry query against its DuckDB oracle,
-    with the correctness gate's canonical comparison.  Every PageRank and
-    connected-components graph at the gate's scale factors fits the driver
-    kernel, so force the distributed loops with local_threshold=0 — the
-    queries import these functions at call time.  The other queries run
-    their distributed loops as registered."""
+    """Each iterative or prefix-rank kernel's registry query against its
+    DuckDB oracle, with the correctness gate's canonical comparison.  Every
+    PageRank and connected-components graph at the gate's scale factors
+    fits the driver kernel, so force the distributed loops with
+    local_threshold=0 — the queries import these functions at call time.
+    The other queries run their distributed kernels as registered."""
     import functools
 
     import __spark_entry__
@@ -958,6 +1001,7 @@ def test_gd_classifier_reads_its_training_table_once(spark, gd):
     the label column runs once per training row over 5 iterations (it ran
     once per row per iteration when every gradient re-read the source),
     and the fit leaves no persisted RDD behind."""
+    import bench
     from compss_python_spark.ml import classification
 
     rows = spark.sparkContext.accumulator(0)
@@ -977,6 +1021,9 @@ def test_gd_classifier_reads_its_training_table_once(spark, gd):
     train = df.filter("vec_id % 2 = 0").withColumn("y", counted("y"))
     test = df.filter("vec_id % 2 = 1")
     persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    # Unpersist what earlier tests left, so that the context cleaner freeing
+    # it during the fit cannot move the count.
+    bench._release_stray_blocks(spark)
     before = persistent().size()
     getattr(classification, gd)(train, test, iters=5, dim=4)
     assert rows.value == 30

@@ -5,6 +5,8 @@ fixture-based tests miss."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pandas as pd
 from conftest import retry_under_load
 from hypothesis import HealthCheck, given, settings
@@ -397,6 +399,19 @@ NTILE_ROWS = st.lists(
 )
 
 
+@contextlib.contextmanager
+def _range_partitions_kept(spark):
+    """Keep every range partition of a shuffle: AQE would coalesce inputs
+    this small into one, and the per-partition offsets would go untested."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 @given(vals=NTILE_ROWS, b=st.integers(min_value=1, max_value=9))
 @SETTINGS
 def test_ntile_distributed_matches_sql_ntile_property(spark, vals, b):
@@ -405,14 +420,49 @@ def test_ntile_distributed_matches_sql_ntile_property(spark, vals, b):
 
     pdf = pd.DataFrame({"id": range(len(vals)), "v": vals}).astype("int64")
     df = spark.createDataFrame(pdf)
-    got = aggregation.ntile_distributed(df, ["v", "id"], b, "nt", num_range_parts=4)
-    ref = df.withColumn(
-        "nt_ref", F.ntile(b).over(Window.orderBy(F.asc("v"), F.asc("id")))
+    with _range_partitions_kept(spark):
+        got = aggregation.ntile_distributed(df, ["v", "id"], b, "nt")
+        ref = df.withColumn(
+            "nt_ref", F.ntile(b).over(Window.orderBy(F.asc("v"), F.asc("id")))
+        )
+        assert (
+            got.join(ref, ["id", "v"]).filter(F.col("nt") != F.col("nt_ref")).count()
+            == 0
+        )
+
+
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(min_value=-20, max_value=20),
+            st.integers(min_value=0, max_value=5),
+        ),
+        min_size=0,
+        max_size=60,
+    ),
+    weighted=st.booleans(),
+)
+@SETTINGS
+def test_rows_before_matches_pandas_prefix_sum_property(spark, rows, weighted):
+    """The prefix-rank kernel against a pandas cumulative sum, over every
+    range partition of the session's shuffle width (empty ones included):
+    ``_before`` is the weight of the rows strictly before each row in a
+    total order, and the total is the weight of all rows."""
+    pdf = pd.DataFrame(rows, columns=["v", "w"]).astype("int64")
+    pdf["id"] = range(len(pdf))
+    df = (
+        spark.createDataFrame(pdf)
+        if len(pdf)
+        else spark.createDataFrame([], "v long, w long, id long")
     )
-    assert (
-        got.join(ref, ["id", "v"]).filter(F.col("nt") != F.col("nt_ref")).count()
-        == 0
-    )
+    with _range_partitions_kept(spark):
+        got, total = etl._rows_before(df, ["v", "id"], "w" if weighted else None)
+        got = {r["id"]: r["_before"] for r in got.collect()}
+    ref = pdf.sort_values(["v", "id"])
+    w = ref["w"] if weighted else pd.Series(1, index=ref.index)
+    want = dict(zip(ref["id"], (w.cumsum() - w).tolist()))
+    assert got == want
+    assert total == int(w.sum())
 
 
 WORDS = st.lists(
