@@ -105,11 +105,14 @@ def release_checkpoint(df: DataFrame) -> None:
     the operator.
     """
     try:
+        sc = df.sparkSession.sparkContext._jsc.sc()
         plan = df._jdf.queryExecution().analyzed()
         leaves = plan.collectLeaves()
         for i in range(leaves.size()):
             leaf = leaves.apply(i)
             if leaf.getClass().getSimpleName() == "LogicalRDD":
-                leaf.rdd().unpersist(False)
+                # Through the context, not RDD.unpersist: that one logs a
+                # "was locally checkpointed" warning on every release.
+                sc.unpersistRDD(leaf.rdd().id(), False)
     except Exception:
         pass

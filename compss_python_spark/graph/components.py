@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from compss_python_spark.caching import iterate
-from compss_python_spark.graph._scoped_conf import scoped_shuffle_partitions
+from compss_python_spark.session import loop_width_confs, scoped_conf
 
 
 def connected_components(
@@ -90,7 +90,7 @@ def connected_components(
         finally:
             c.unpersist()
     try:
-        with scoped_shuffle_partitions(spark, n_edges, 2_000_000):
+        with scoped_conf(spark, loop_width_confs(spark, n_edges, 2_000_000)):
             return _cc_star(c, max_iters)
     finally:
         c.unpersist()

@@ -30,9 +30,9 @@ joins/aggs, with scale-critical choices the reference lacks:
   for the same 8 iterations).  The loop therefore runs under a shuffle
   partition count derived from the edge count (~500 k edges/partition,
   capped at the session default) — a huge graph still gets the full
-  default width.  The conf scope is lock-serialized and the final ranks
-  are materialized (eager localCheckpoint) inside it; see
-  graph/_scoped_conf.py for the concurrency contract.
+  default width.  The final ranks are materialized (eager
+  localCheckpoint) inside the conf scope; see ``session.scoped_conf`` for
+  the concurrency contract.
 - **Gate-sized setup**: the regime gate counts the distinct-edge cache the
   loop needs anyway (never the raw edge SOURCE — re-executing a join-shaped
   source to count it dominated the 10× probe); the node count, seed count
@@ -57,10 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from compss_python_spark.caching import iterate
-from compss_python_spark.graph._scoped_conf import (
-    scoped_aqe_disabled,
-    scoped_shuffle_partitions,
-)
+from compss_python_spark.session import loop_width_confs, scoped_conf
 
 # Conservative serialized-bytes bounds for the loop-conf gates below:
 # a contribution-shuffle row is (node key, double) ≈ 16 B payload; 32 B
@@ -216,7 +213,8 @@ def _pagerank(
     measure_key = isinstance(node_type, (T.StringType, T.BinaryType))
     helpers: list[DataFrame] = [e]
     try:
-        with scoped_shuffle_partitions(spark, n_edges, _EDGES_PER_PARTITION):
+        width_confs = loop_width_confs(spark, n_edges, _EDGES_PER_PARTITION)
+        with scoped_conf(spark, width_confs):
             nodes = node_ids
             stats = [F.count("*").alias("_n")]
             if seed_set is not None:
@@ -251,7 +249,9 @@ def _pagerank(
                 ).defaultSize()
             )
             aqe_off, bcast = _loop_conf_gates(spark, n_edges, n_nodes, key_bytes)
-            with scoped_aqe_disabled(spark, aqe_off):
+            # Nested: aqe_off is measured inside the width scope.
+            aqe_confs = {"spark.sql.adaptive.enabled": "false"} if aqe_off else {}
+            with scoped_conf(spark, aqe_confs):
                 out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
                 edges_w = (
                     e.join(out_deg, "src")

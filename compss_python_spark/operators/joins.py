@@ -14,15 +14,12 @@ Engine extensions beyond reference parity: semi/anti joins (free in Spark).
 
 from __future__ import annotations
 
-import threading as _threading
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Serializes aqe_skew_scope against itself (see its docstring): SQL conf is
-# session-global, so overlapping scopes would interleave set/restore.
-_AQE_SCOPE_LOCK = _threading.RLock()
+from compss_python_spark.session import scoped_conf
 
 _MODE_MAP = {
     "inner": "inner",
@@ -303,22 +300,9 @@ def aqe_skew_scope(
       threshold, 64 MB advisory) — callers narrow them only on
       small-data demonstrations.
 
-    SESSION-GLOBAL CONTRACT: Spark SQL conf belongs to the SparkSession,
-    not the plan — so (a) the caller MUST materialize the join INSIDE the
-    scope (write/collect/localCheckpoint); (b) concurrent callers in the
-    same session SERIALIZE on a process lock (two scoped queries never
-    overlap — the second waits); (c) while a scope is open, the flipped
-    confs are visible to ANY bystander job the same session runs in that
-    window (they run with skew-split knobs and broadcast disabled).  For
-    multi-tenant use, give each tenant `spark.newSession()` — conf is
-    per-session, the lock here guards only this module's scopes.  On
-    exit every key is restored: explicitly-set keys to their prior value,
-    never-set keys back to unset (probed with `conf.get(k, None)`, which
-    bypasses the ConfigEntry default — a bare `conf.get(k)` returns the
-    built-in default for most SQL confs and would pin them on exit).
+    The knobs are set through :func:`session.scoped_conf`, whose contract
+    applies: materialize the join inside the scope.
     """
-    from contextlib import contextmanager
-
     pairs = {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -335,25 +319,4 @@ def aqe_skew_scope(
         pairs["spark.sql.files.maxPartitionBytes"] = scan_split_bytes
         pairs["spark.sql.files.openCostInBytes"] = "0"
 
-    @contextmanager
-    def _scope():
-        with _AQE_SCOPE_LOCK:
-            prev: dict[str, str | None] = {}
-            for k in pairs:
-                # get(k, None) returns None unless the key was EXPLICITLY
-                # set: getConfString(key, default) short-circuits past the
-                # ConfigEntry default, so never-set keys restore to unset
-                # instead of being pinned to their built-in default.
-                prev[k] = spark.conf.get(k, None)
-            for k, v in pairs.items():
-                spark.conf.set(k, v)
-            try:
-                yield
-            finally:
-                for k, v in prev.items():
-                    if v is None:
-                        spark.conf.unset(k)
-                    else:
-                        spark.conf.set(k, v)
-
-    return _scope()
+    return scoped_conf(spark, pairs)

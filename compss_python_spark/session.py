@@ -14,11 +14,17 @@ Scale notes (100 TB target):
 - Arrow enabled so any Pandas-UDF slow path is batch-vectorized.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle and are cluster-invariant.
+
+This module also owns every conf change the library scopes: each one runs
+through :func:`scoped_conf`.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
+from typing import Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
@@ -93,3 +99,74 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on ``spark`` for the scope and restore them on exit.
+
+    Spark SQL conf belongs to the session, not the plan, so the contract
+    is:
+
+    - the caller materializes its result (collect, write, eager
+      checkpoint) INSIDE the scope — a lazy DataFrame returned from it
+      would run under the restored confs;
+    - scopes serialize process-wide on one reentrant lock, so two scopes
+      never interleave their set/restore (a nested scope in the same
+      thread is fine);
+    - other jobs that run on the same session while a scope is open see
+      its confs.  For multi-tenant use give each tenant
+      ``spark.newSession()``: conf is per-session.
+
+    Each key's previous value is read with ``conf.get(k, None)``, which is
+    None unless the key was explicitly set (a bare ``get(k)`` returns the
+    built-in default), so a never-set key goes back to unset rather than
+    being pinned to its default.  An empty mapping is a no-op scope.
+    """
+    if not confs:
+        yield
+        return
+    with _CONF_LOCK:
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+
+def loop_width_confs(
+    spark: SparkSession, n_edges: int, edges_per_partition: int
+) -> dict[str, str]:
+    """The confs an iterative graph loop runs under: shuffle width
+    ``max(1, min(session default, n_edges // edges_per_partition + 1))``
+    and AQE partition coalescing off.
+
+    Small graphs pay empty-task scheduling at the session default width,
+    while a graph big enough for the cluster keeps the full default.  The
+    width is already size-derived; letting AQE re-coalesce each
+    iteration's exchanges (a) second-guesses that choice per stage and (b)
+    breaks co-partitioning between the persisted edge table and the
+    per-iteration joins, inserting exchanges the static plan doesn't need.
+    Interleaved A/B on a 5.9M-edge graph, 8 iterations, 3 rounds each:
+    coalescing on 2.96 s min / off 2.51 s (~15%).  AQE itself stays ON
+    (skew-join splitting is still wanted on power-law graphs).
+
+    The default is read at the call, outside the lock: a scope open on
+    another thread at that moment lends its width (speed only; results
+    never depend on the width).
+    """
+    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    width = max(1, min(default, n_edges // edges_per_partition + 1))
+    return {
+        "spark.sql.shuffle.partitions": str(width),
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }

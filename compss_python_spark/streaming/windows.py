@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from compss_python_spark.session import scoped_conf
+
 
 def tumbling_window_counts(
     events: DataFrame,
@@ -140,9 +142,9 @@ def replay_as_stream(
     session keys (measured, sfgen1000 r11 sweep — the JVM died, not the
     query); RocksDB spills state to local disk, which is also the
     production-cluster recommendation this harness should mirror.  The
-    conf is restored afterwards so batch queries in the same session are
-    untouched; results are state-store-independent (re-proven at sf0.01
-    across all streaming rows when this landed).
+    conf is scoped (``session.scoped_conf``) so batch queries in the
+    same session are untouched; results are state-store-independent
+    (re-proven at sf0.01 across all streaming rows when this landed).
 
     ``sink="parquet"`` (append-mode only — the file sink's contract)
     writes the stream to ``sink_dir`` and returns a READ of that path
@@ -156,9 +158,7 @@ def replay_as_stream(
     _ROCKS = (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
-    prev = spark.conf.get(_PROVIDER)
-    spark.conf.set(_PROVIDER, _ROCKS)
-    try:
+    with scoped_conf(spark, {_PROVIDER: _ROCKS}):
         reader = spark.readStream.schema(schema)
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -184,8 +184,6 @@ def replay_as_stream(
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        spark.conf.set(_PROVIDER, prev)
     if sink == "parquet":
         return spark.read.schema(out.schema).parquet(sink_dir)
     return spark.table(query_name)

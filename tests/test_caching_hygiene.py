@@ -213,3 +213,43 @@ def test_widened_scan_survives_a_full_sweep(spark):
     spark.catalog.clearCache()
     assert consumer_b.first()["c"] == 1000
     assert _n_persistent(spark) - base == 0
+
+
+_QUIET_RELEASE_SCRIPT = """
+from pyspark.sql import SparkSession
+from compss_python_spark.caching import iterate, release_checkpoint
+
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.memory", "512m")
+    .getOrCreate()
+)
+spark.sparkContext.setLogLevel("WARN")
+out = iterate(spark.range(10), lambda df: df.selectExpr("id + 1 AS id"), 4)
+assert out.count() == 10
+release_checkpoint(out)
+print("released", flush=True)
+spark.stop()
+"""
+
+
+def test_release_checkpoint_logs_no_warning():
+    """Releasing a checkpoint through the RDD itself logs "RDD N was
+    locally checkpointed" once per release, so every loop round wrote a
+    warning to stderr.  A loop of 4 rounds plus the final release must
+    log none (the JVM's stderr is only visible from outside, hence the
+    subprocess)."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo)
+    run = subprocess.run(
+        [sys.executable, "-c", _QUIET_RELEASE_SCRIPT],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert "released" in run.stdout
+    assert run.stderr.count("was locally checkpointed") == 0, run.stderr[-2000:]

@@ -880,13 +880,12 @@ def test_pagerank_loop_gates_read_the_session_thresholds(spark):
     turns both off, and at 10MB they follow the bounded sizes, with a rank
     row sized as 56 B plus the node key's width."""
     from compss_python_spark.graph.pagerank import _loop_conf_gates
+    from compss_python_spark.session import scoped_conf
 
     key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "-1")
+    with scoped_conf(spark, {key: "-1"}):
         assert _loop_conf_gates(spark, n_edges=1000, n_nodes=100, key_bytes=8) == (False, False)
-        spark.conf.set(key, "10MB")
+    with scoped_conf(spark, {key: "10MB"}):
         assert _loop_conf_gates(spark, n_edges=1000, n_nodes=100, key_bytes=8) == (True, True)
         # ranks above 10MB / 64 B per node: no broadcast, so AQE stays on
         assert _loop_conf_gates(spark, n_edges=1000, n_nodes=200_000, key_bytes=8) == (False, False)
@@ -896,8 +895,6 @@ def test_pagerank_loop_gates_read_the_session_thresholds(spark):
         # with 200-byte string keys (25.6 MB)
         assert _loop_conf_gates(spark, n_edges=1000, n_nodes=100_000, key_bytes=8) == (True, True)
         assert _loop_conf_gates(spark, n_edges=1000, n_nodes=100_000, key_bytes=200) == (False, False)
-    finally:
-        spark.conf.set(key, prev)
 
 
 # Every query whose kernel runs a fixed-point loop (caching.iterate) or

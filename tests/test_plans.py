@@ -141,6 +141,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path_factory):
     from pyspark.sql import functions as F
     from compss_python_spark.sources.io import write_bucketed
     from compss_python_spark.plans.registry import table
+    from compss_python_spark.session import scoped_conf
 
     wh = str(tmp_path_factory.mktemp("bucketed_wh"))
     orders = table(spark, sf_dir, "orders")
@@ -152,33 +153,31 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path_factory):
         "b_lineitem", "o_orderkey", 8, path=f"{wh}/b_lineitem",
     )
     try:
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = (
-            spark.table("b_orders")
-            .join(spark.table("b_lineitem"), "o_orderkey")
-            .groupBy("o_orderpriority")
-            .agg(F.count("*").alias("n"))
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            j.explain("formatted")
-        plan = buf.getvalue()
-        # The whole plan may contain exactly ONE Exchange — the final tiny
-        # groupBy one.  (Formatted explain prints root-first, so slicing the
-        # text before "HashAggregate" would inspect only the header and
-        # vacuously pass even for a fully-shuffling join.)
-        import re
+        with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            j = (
+                spark.table("b_orders")
+                .join(spark.table("b_lineitem"), "o_orderkey")
+                .groupBy("o_orderpriority")
+                .agg(F.count("*").alias("n"))
+            )
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                j.explain("formatted")
+            plan = buf.getvalue()
+            # The whole plan may contain exactly ONE Exchange — the final
+            # tiny groupBy one.  (Formatted explain prints root-first, so
+            # slicing the text before "HashAggregate" would inspect only the
+            # header and vacuously pass even for a fully-shuffling join.)
+            import re
 
-        exchanges = re.findall(r"\(\d+\) Exchange", plan)
-        assert "SortMergeJoin" in plan
-        assert len(exchanges) == 1, (
-            f"bucketed join must not shuffle (want only the final groupBy "
-            f"exchange, got {len(exchanges)}):\n{plan}"
-        )
-        assert j.count() > 0
+            exchanges = re.findall(r"\(\d+\) Exchange", plan)
+            assert "SortMergeJoin" in plan
+            assert len(exchanges) == 1, (
+                f"bucketed join must not shuffle (want only the final groupBy "
+                f"exchange, got {len(exchanges)}):\n{plan}"
+            )
+            assert j.count() > 0
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP TABLE IF EXISTS b_orders")
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
@@ -418,11 +417,7 @@ def test_aqe_skew_scope_splits_hot_partition_and_restores_conf(spark):
 
     from compss_python_spark.operators.joins import aqe_skew_scope
 
-    before_force = None
-    try:
-        before_force = spark.conf.get("spark.sql.adaptive.forceOptimizeSkewedJoin")
-    except Exception:  # noqa: BLE001 — unset is the expected baseline
-        pass
+    before_force = spark.conf.get("spark.sql.adaptive.forceOptimizeSkewedJoin", None)
     before_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
 
     left = spark.range(0, 200_000, 1, 8).select(
@@ -454,11 +449,7 @@ def test_aqe_skew_scope_splits_hot_partition_and_restores_conf(spark):
         + plan[:2000]
     )
 
-    after_force = None
-    try:
-        after_force = spark.conf.get("spark.sql.adaptive.forceOptimizeSkewedJoin")
-    except Exception:  # noqa: BLE001
-        pass
+    after_force = spark.conf.get("spark.sql.adaptive.forceOptimizeSkewedJoin", None)
     assert after_force == before_force
     assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == before_bcast
     # Never-set keys must restore to UNSET, not to their built-in default

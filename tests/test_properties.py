@@ -5,8 +5,6 @@ fixture-based tests miss."""
 
 from __future__ import annotations
 
-import contextlib
-
 import pandas as pd
 from conftest import retry_under_load
 from hypothesis import HealthCheck, given, settings
@@ -14,6 +12,7 @@ from hypothesis import strategies as st
 
 from compss_python_spark.operators import aggregation, etl, setops
 from compss_python_spark.operators import sort as sort_ops
+from compss_python_spark.session import scoped_conf
 
 ROWS = st.lists(
     st.tuples(
@@ -399,17 +398,9 @@ NTILE_ROWS = st.lists(
 )
 
 
-@contextlib.contextmanager
-def _range_partitions_kept(spark):
-    """Keep every range partition of a shuffle: AQE would coalesce inputs
-    this small into one, and the per-partition offsets would go untested."""
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
+# Keep every range partition of a shuffle: AQE would coalesce inputs this
+# small into one, and the per-partition offsets would go untested.
+_KEEP_RANGE_PARTITIONS = {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
 
 
 @given(vals=NTILE_ROWS, b=st.integers(min_value=1, max_value=9))
@@ -420,7 +411,7 @@ def test_ntile_distributed_matches_sql_ntile_property(spark, vals, b):
 
     pdf = pd.DataFrame({"id": range(len(vals)), "v": vals}).astype("int64")
     df = spark.createDataFrame(pdf)
-    with _range_partitions_kept(spark):
+    with scoped_conf(spark, _KEEP_RANGE_PARTITIONS):
         got = aggregation.ntile_distributed(df, ["v", "id"], b, "nt")
         ref = df.withColumn(
             "nt_ref", F.ntile(b).over(Window.orderBy(F.asc("v"), F.asc("id")))
@@ -455,7 +446,7 @@ def test_rows_before_matches_pandas_prefix_sum_property(spark, rows, weighted):
         if len(pdf)
         else spark.createDataFrame([], "v long, w long, id long")
     )
-    with _range_partitions_kept(spark):
+    with scoped_conf(spark, _KEEP_RANGE_PARTITIONS):
         got, total = etl._rows_before(df, ["v", "id"], "w" if weighted else None)
         got = {r["id"]: r["_before"] for r in got.collect()}
     ref = pdf.sort_values(["v", "id"])
